@@ -556,8 +556,7 @@ object SparkEntry {
       ch.createTable("default", "events_rt", cols)
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "events_rt",
-        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) },
-        httpFormat = "Native"))(
+        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) }))(
         Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"))
       val back = s.read.format("graft-clickhouse")
         .option("url", ch.endpoint).option("database", "default")
@@ -583,8 +582,7 @@ object SparkEntry {
       ch.createTable("default", "events_agg", cols)
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "events_agg",
-        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) },
-        httpFormat = "Native"))(
+        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) }))(
         Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"))
       val back = s.read.format("graft-clickhouse")
         .option("url", ch.endpoint).option("database", "default")
@@ -612,8 +610,7 @@ object SparkEntry {
       ch.createTable("default", "events_top", cols)
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "events_top",
-        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) },
-        httpFormat = "Native"))(
+        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) }))(
         Tables.events(s, dir).select("event_id", "user_id", "value"))
       val back = s.read.format("graft-clickhouse")
         .option("url", ch.endpoint).option("database", "default")
@@ -642,8 +639,7 @@ object SparkEntry {
       val src = Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "events_part",
-        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) },
-        httpFormat = "Native"))(src)
+        mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) }))(src)
       val maxId = src.agg(max("event_id")).head.getLong(0)
       val back = s.read.format("graft-clickhouse")
         .option("url", ch.endpoint).option("database", "default")
@@ -714,8 +710,7 @@ object SparkEntry {
         ch.createTable("default", "events_time", cols)
         ClickHouseSink.writeBatch(ClickHouseSink.Config(
           url = ch.endpoint, database = "default", table = "events_time",
-          mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) },
-          httpFormat = "Native"))(
+          mappings = cols.map { case (n, t) => SinkMapper.ColumnMapping(n, n, t) }))(
           Tables.events(s, dir).select("event_id", "ts", "user_id", "value"))
         val back = s.read.format("graft-clickhouse")
           .option("url", ch.endpoint).option("database", "default")

@@ -277,16 +277,20 @@ final class PipelineService(spark: SparkSession, dlqRoot: Option[String] = None,
   }
 
   /** Start the validation-DLQ companion stream for `bad` rows and record
-    * it on the pipeline so stop/terminate halt it with the main query. */
+    * it on the pipeline so stop/terminate halt it with the main query.
+    * Each batch is persisted around the DLQ write, so the write's count
+    * and its seq-stamped append read the source batch once between them
+    * (an empty batch writes nothing, see [[Dlq.writeParquet]]). */
   private def attachValidationDlq(id: String, bad: DataFrame): Unit = {
     val dlqFn = dlqOf(id)
     val q = bad.writeStream
       .option("checkpointLocation", s"${checkpointOf(id)}_validation_dlq")
       .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty)
-          dlqFn(Dlq.envelope("ingestor",
-            "failed to validate data against the declared schema")(
-            b.withColumnRenamed("__raw", "raw")))
+        val cached = b.persist()
+        try dlqFn(Dlq.envelope("ingestor",
+          "failed to validate data against the declared schema")(
+          cached.withColumnRenamed("__raw", "raw")))
+        finally { cached.unpersist(); () }
       }
       .start()
     registry.computeIfPresent(id, (_, dd) => dd.copy(sideQueries = dd.sideQueries :+ q))

@@ -4,16 +4,18 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 
-import graft.types.{CHType, RowBinaryEncoder}
+import graft.types.CHType
+import graft.types.NativeEncoder.{BlockBuilder, encodeSingleRow}
 
 /** ClickHouse HTTP-interface INSERT leg — the sink's wire protocol
   * (the reference reaches ClickHouse through clickhouse-go's native
   * protocol, internal/client/clickhouse.go; the HTTP interface is the
   * public, documented equivalent: POST `INSERT INTO db.table (cols)
-  * FORMAT JSONEachRow` with the query and per-insert settings in URL
-  * parameters, credentials in `X-ClickHouse-User`/`X-ClickHouse-Key`
+  * FORMAT Native` — the same columnar blocks, see
+  * [[graft.types.NativeEncoder]] — with the query and per-insert settings
+  * in URL parameters, credentials in `X-ClickHouse-User`/`X-ClickHouse-Key`
   * headers, and server faults surfaced as an `X-ClickHouse-Exception-Code`
   * header plus a `Code: NNN. DB::Exception: ...` body that
   * [[ErrorClassifier]] consumes unchanged).
@@ -42,13 +44,11 @@ object ClickHouseHttp {
     /** Per-insert settings passed as URL params (async_insert,
       * wait_for_async_insert, insert_deduplicate, ...). */
     settings: Map[String, String] = Map.empty,
-    format: String = "JSONEachRow",            // or RowBinary, or Native
-    /** column → ClickHouse type, required for RowBinary/Native encoding
-      * (JSONEachRow is self-describing; the binary formats are typed). */
+    /** column → ClickHouse type each Native block column declares; a
+      * column missing here is declared String. */
     columnTypes: Map[String, String] = Map.empty,
     /** gzip the INSERT body (`Content-Encoding: gzip`, which the server
-      * decompresses natively) — JSONEachRow compresses ~10×, so at scale
-      * the CPU spent is bought back in network many times over. */
+      * decompresses natively) — trades client CPU for network bytes. */
     compress: Boolean = false,
     maxRowsPerPost: Int = 100000,
     /** Byte budget per POST — flushes at whichever of rows/bytes trips
@@ -65,11 +65,7 @@ object ClickHouseHttp {
 
   def insertQuery(c: Config, columns: Seq[String]): String =
     s"INSERT INTO ${quoteId(c.database)}.${quoteId(c.table)} " +
-      s"(${columns.map(quoteId).mkString(", ")}) FORMAT ${c.format}"
-
-  /** Settings every insert carries: Spark's JSON encoder emits ISO-8601
-    * timestamps, which ClickHouse only parses under best_effort. */
-  private val baseSettings = Map("date_time_input_format" -> "best_effort")
+      s"(${columns.map(quoteId).mkString(", ")}) FORMAT Native"
 
   private def enc(s: String) = URLEncoder.encode(s, "UTF-8")
 
@@ -80,7 +76,7 @@ object ClickHouseHttp {
     out.toByteArray
   }
 
-  /** POST one slab of `format`-encoded rows. Server-side faults are NOT
+  /** POST one encoded INSERT body. Server-side faults are NOT
     * retried here — that retry policy belongs to the batch handler, which
     * knows the budget. CONNECTION-level faults (refused/reset/timeout/
     * premature EOF) get ONE bounded in-place retry first: a Spark task
@@ -150,7 +146,7 @@ object ClickHouseHttp {
     * fault no longer proves the server didn't commit (see [[post]]). */
   private def postOnce(c: Config, query: String, body0: Array[Byte],
                        bodySent: java.util.concurrent.atomic.AtomicBoolean): Unit = {
-    val params = baseSettings ++ c.settings + ("query" -> query)
+    val params = c.settings + ("query" -> query)
     val qs = params.toSeq.sortBy(_._1).map { case (k, v) => s"${enc(k)}=${enc(v)}" }
       .mkString("&")
     val url = URI.create(c.endpoint.stripSuffix("/") + "/?" + qs).toURL
@@ -193,164 +189,47 @@ object ClickHouseHttp {
   }
 
   /** Spark's default JSON timestamp format is millisecond-precision (SSS)
-    * — a DateTime64(6) column would silently lose its microseconds on the
-    * JSONEachRow leg (caught by RowBinaryPropertySpec's cross-format
-    * comparison). Emit full micros; best_effort parses them fine. */
+    * — a dead-lettered DateTime64(6) row's original_message would lose
+    * its microseconds. Emit full micros. */
   private val jsonOpts: java.util.Map[String, String] =
     java.util.Map.of("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
 
-  /** Columns by VERBATIM name: destination columns are user config and may
-    * contain dots (legal CH identifiers, quoted everywhere else via
-    * quoteId) — a bare col(name) would resolve "a.b" as a nested field. */
-  private def verbatimCols(df: DataFrame): Seq[org.apache.spark.sql.Column] =
-    df.columns.toSeq.map(n => df.col(s"`${n.replace("`", "``")}`"))
-
-  private def jsonCol(df: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{struct, to_json}
-    to_json(struct(verbatimCols(df): _*), jsonOpts)
+  /** Run a partition-wise poison-row isolation over `df` and return its
+    * failures as (jsonRow, error) pairs. `isolate` hands back each failed
+    * Row itself; the JSON text — the DLQ's original_message — is encoded
+    * only over those rows, never over the rows that landed. */
+  private[sink] def failuresAsJson(df: DataFrame)(
+      isolate: Iterator[Row] => Iterator[(Row, String)]): Dataset[(String, String)] = {
+    import org.apache.spark.sql.functions.{col, to_json}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val failures = StructType(Seq(
+      StructField("row", df.schema), StructField("error", StringType)))
+    df.mapPartitions(it => isolate(it).map { case (r, e) => Row(r, e) })(
+        Encoders.row(failures))
+      .select(to_json(col("row"), jsonOpts), col("error"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
   }
 
-  /** Encode the mapped frame as one byte payload PER ROW in the configured
-    * wire format — the unit both the slab path (concatenate) and the
-    * poison-isolation path (re-post singly) work in.
-    *  - JSONEachRow: Spark's JSON encoder + '\n'. Null fields are OMITTED;
-    *    ClickHouse fills omitted fields with column defaults
-    *    (input_format_defaults_for_omitted_fields, on by default) — the
-    *    same absent→NULL/default contract the reference mapper implements.
-    *  - RowBinary: column-order binary via [[RowBinaryEncoder]], driven by
-    *    [[Config.columnTypes]] — roughly half the wire bytes and no
-    *    server-side text parsing. */
-  private def rowBytes(c: Config, df: DataFrame): org.apache.spark.sql.Dataset[Array[Byte]] = {
-    import org.apache.spark.sql.Encoders
-    c.format match {
-      case "RowBinary" =>
-        val types = df.columns.toSeq.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
-        df.map(row => RowBinaryEncoder.encode(row, types))(Encoders.BINARY)
-      case _ =>
-        df.select(jsonCol(df)).as[String](Encoders.STRING)
-          .map(s => (s + "\n").getBytes(UTF_8))(Encoders.BINARY)
-    }
-  }
+  private def blockTypes(c: Config, names: Seq[String]): Seq[CHType] =
+    names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
 
   /** The DataFrame write leg: the frame is already in sink shape (mapped
-    * columns, target names) — encode per the configured format and POST
-    * per partition, slabbed at maxRowsPerPost rows / maxBytesPerPost
-    * bytes, whichever trips first. */
-  def write(c: Config)(df: DataFrame): Unit =
-    if (c.format == "Native") writeNativeBlocks(c)(df) else writeRowSlabs(c)(df)
-
-  private def writeRowSlabs(c: Config)(df: DataFrame): Unit = {
-    val query = insertQuery(c, df.columns.toSeq)
-    val conf = c
-    rowBytes(c, df).foreachPartition { (it: Iterator[Array[Byte]]) =>
-      val buf = new java.io.ByteArrayOutputStream(1 << 20)
-      var n = 0
-      def flush(): Unit = if (n > 0) {
-        post(conf, query, buf.toByteArray)
-        buf.reset(); n = 0
-      }
-      while (it.hasNext) {
-        val b = it.next()
-        buf.write(b, 0, b.length)
-        n += 1
-        if (n >= conf.maxRowsPerPost || buf.size >= conf.maxBytesPerPost) flush()
-      }
-      flush()
-    }
-  }
-
-  /** Insert with poison-row isolation — the reference's append-error path
-    * (internal/sink/clickhouse.go:536-718: a row the server rejects is
-    * dead-lettered ALONE; the rest of the batch replays and lands).
-    *
-    * Each executor task slabs its own rows as [[write]] does; when a slab
-    * is rejected with a ROW-DATA fault (parse/convert/range — see
-    * [[ErrorClassifier.rowDataFaultCodes]]), the task replays THAT slab
-    * row-by-row: poison rows come back as (jsonRow, serverError) for the
-    * caller to dead-letter, every other row lands. Isolation is strictly
-    * task-local, so slabs that already landed — in this task or any
-    * other — are never re-posted and can't duplicate. Non-data faults
-    * (table/auth/overload) rethrow so the batch handler's classify/retry
-    * policy governs them; a retryable fault mid-replay likewise rethrows
-    * (at-least-once, the reference's NACK-redeliver semantics — pair with
-    * insert_deduplicate/idempotency for exactly-once).
-    *
-    * Returns the failed rows as a DISTRIBUTED Dataset[(jsonRow, serverError)]
-    * — never a driver collection: the failure-set size is bounded only by
-    * the batch (a mapping edit can poison EVERY row), and the reference
-    * dead-letters worker-side for the same reason
-    * (internal/processor/dlq_processor.go:35-69). LAZY: the INSERTs execute
-    * when the returned Dataset is acted on — act on it exactly once, or
-    * persist it first, or slabs will re-POST (at-least-once).
-    * [[ClickHouseSink.writeBatchHttp]] does persist + count + distributed
-    * DLQ write, returning only counts to the driver. */
-  def writeIsolating(c: Config)(df: DataFrame): org.apache.spark.sql.Dataset[(String, String)] =
-    if (c.format == "Native") writeIsolatingNative(c)(df) else writeIsolatingRows(c)(df)
-
-  private def writeIsolatingRows(c: Config)(df: DataFrame): org.apache.spark.sql.Dataset[(String, String)] = {
-    val query = insertQuery(c, df.columns.toSeq)
-    val conf = c
-    val spark = df.sparkSession
-    import spark.implicits._
-    rowBytesWithRepr(c, df).mapPartitions { it =>
-      val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      val chunk = scala.collection.mutable.ArrayBuffer[(String, Array[Byte])]()
-      var chunkBytes = 0L
-      // row-data faults only: a table/auth/query-level fault mid-replay
-      // must RETHROW so the batch handler's classify/retry policy governs
-      // it — dead-lettering good rows on a dropped table or rotated
-      // credential would be unrecoverable
-      def replayRowwise(): Unit = chunk.foreach { case (repr, b) =>
-        try post(conf, query, b)
-        catch {
-          case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
-            failed += ((repr, s"Code: $code. DB::Exception: $msg"))
-        }
-      }
-      def flush(): Unit = if (chunk.nonEmpty) {
-        val body = new java.io.ByteArrayOutputStream(1 << 20)
-        chunk.foreach { case (_, b) => body.write(b, 0, b.length) }
-        try post(conf, query, body.toByteArray)
-        catch {
-          case CHServerException(code, _) if ErrorClassifier.isRowDataFault(code) =>
-            replayRowwise()
-        }
-        chunk.clear(); chunkBytes = 0
-      }
-      while (it.hasNext) {
-        it.next() match {
-          // client-side encode failure (RowBinary FixedString overflow,
-          // unknown enum value): that row is poison by construction —
-          // dead-letter it alone, the rest of the slab proceeds
-          case (repr, null, err) => failed += ((repr, err))
-          case (repr, bytes, _) =>
-            chunk += ((repr, bytes)); chunkBytes += bytes.length
-            if (chunk.size >= conf.maxRowsPerPost ||
-              chunkBytes >= conf.maxBytesPerPost) flush()
-        }
-      }
-      flush()
-      failed.iterator
-    }
-  }
-
-  /** Native-format write leg: COLUMNAR blocks per partition — one type
-    * dispatch per column per block instead of per value, the layout the
-    * server stores without per-row reassembly (see
-    * [[graft.types.NativeEncoder]]). Slab bounds are the same
-    * rows/bytes-whichever-trips-first as the row-oriented leg. A
-    * client-side encode fault rethrows (this path has no isolation —
+    * columns, target names). Each partition POSTs COLUMNAR blocks — one
+    * type dispatch per column per block instead of per value, the layout
+    * the server stores without per-row reassembly — slabbed at
+    * maxRowsPerPost rows / maxBytesPerPost bytes, whichever trips first.
+    * A client-side encode fault rethrows (this path has no isolation —
     * use [[writeIsolating]] for that). */
-  private def writeNativeBlocks(c: Config)(df: DataFrame): Unit = {
+  def write(c: Config)(df: DataFrame): Unit = {
     val names = df.columns.toSeq
-    val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
+    val types = blockTypes(c, names)
     val query = insertQuery(c, names)
     val conf = c
-    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      var b = new graft.types.NativeEncoder.BlockBuilder(names, types)
+    df.foreachPartition { (it: Iterator[Row]) =>
+      var b = new BlockBuilder(names, types)
       def flush(): Unit = if (b.rowCount > 0) {
         post(conf, query, b.build())
-        b = new graft.types.NativeEncoder.BlockBuilder(names, types)
+        b = new BlockBuilder(names, types)
       }
       it.foreach { row =>
         b.tryAppend(row).foreach(err => throw new IllegalArgumentException(err))
@@ -361,84 +240,74 @@ object ClickHouseHttp {
     }
   }
 
-  /** Poison-row isolation on the Native leg: a client-side value fault
-    * rolls just that row out of the block (BlockBuilder.tryAppend is
-    * row-atomic across columns); a server row-data fault replays the
-    * block's rows as single-row blocks, exactly the row-oriented legs'
-    * replay shape. Distributed + lazy like [[writeIsolating]]. */
-  private def writeIsolatingNative(c: Config)(df: DataFrame):
-      org.apache.spark.sql.Dataset[(String, String)] = {
+  /** Insert with poison-row isolation — the reference's append-error path
+    * (internal/sink/clickhouse.go:536-718: a row the server rejects is
+    * dead-lettered ALONE; the rest of the batch replays and lands).
+    *
+    * Each executor task slabs its own rows into blocks as [[write]] does.
+    * A client-side value fault (FixedString overflow, unknown enum value,
+    * out-of-range Date) rolls just that row out of the block
+    * (BlockBuilder.tryAppend is row-atomic across columns). When a block
+    * is rejected with a ROW-DATA fault (parse/convert/range — see
+    * [[ErrorClassifier.rowDataFaultCodes]]), the task replays THAT block's
+    * rows as single-row blocks: poison rows come back as (jsonRow,
+    * serverError) for the caller to dead-letter, every other row lands.
+    * Isolation is strictly task-local, so blocks that already landed — in
+    * this task or any other — are never re-posted and can't duplicate.
+    * Non-data faults (table/auth/overload) rethrow so the batch handler's
+    * classify/retry policy governs them — dead-lettering good rows on a
+    * dropped table or rotated credential would be unrecoverable; a
+    * retryable fault mid-replay likewise rethrows (at-least-once, the
+    * reference's NACK-redeliver semantics — pair with
+    * insert_deduplicate/idempotency for exactly-once).
+    *
+    * Returns the failed rows as a DISTRIBUTED Dataset[(jsonRow, serverError)]
+    * — never a driver collection: the failure-set size is bounded only by
+    * the batch (a mapping edit can poison EVERY row), and the reference
+    * dead-letters worker-side for the same reason
+    * (internal/processor/dlq_processor.go:35-69). LAZY: the INSERTs execute
+    * when the returned Dataset is acted on — act on it exactly once, or
+    * persist it first, or blocks will re-POST (at-least-once).
+    * [[ClickHouseSink.writeBatchHttp]] does persist + count + distributed
+    * DLQ write, returning only counts to the driver. */
+  def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] = {
     val names = df.columns.toSeq
-    val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
+    val types = blockTypes(c, names)
     val query = insertQuery(c, names)
     val conf = c
-    val spark = df.sparkSession
-    import org.apache.spark.sql.functions.struct
-    import spark.implicits._
-    df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
-      .mapPartitions { it =>
-        val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-        var builder = new graft.types.NativeEncoder.BlockBuilder(names, types)
-        val chunk = scala.collection.mutable.ArrayBuffer[(String, org.apache.spark.sql.Row)]()
-        def replayRowwise(): Unit = chunk.foreach { case (repr, r) =>
-          try post(conf, query,
-            graft.types.NativeEncoder.encodeSingleRow(names, types, r))
-          catch {
-            case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
-              failed += ((repr, s"Code: $code. DB::Exception: $msg"))
-          }
+    failuresAsJson(df) { it =>
+      val failed = scala.collection.mutable.ArrayBuffer[(Row, String)]()
+      var builder = new BlockBuilder(names, types)
+      val chunk = scala.collection.mutable.ArrayBuffer[Row]()
+      def replayRowwise(): Unit = chunk.foreach { r =>
+        try post(conf, query, encodeSingleRow(names, types, r))
+        catch {
+          case CHServerException(code, msg) if ErrorClassifier.isRowDataFault(code) =>
+            failed += ((r, s"Code: $code. DB::Exception: $msg"))
         }
-        def flush(): Unit = {
-          if (builder.rowCount > 0) {
-            try post(conf, query, builder.build())
-            catch {
-              case CHServerException(code, _) if ErrorClassifier.isRowDataFault(code) =>
-                replayRowwise()
-            }
-          }
-          builder = new graft.types.NativeEncoder.BlockBuilder(names, types)
-          chunk.clear()
-        }
-        it.foreach { row =>
-          val repr = row.getString(0)
-          val r = row.getStruct(1)
-          builder.tryAppend(r) match {
-            case Some(err) => failed += ((repr, err))
-            case None =>
-              chunk += ((repr, r))
-              if (builder.rowCount >= conf.maxRowsPerPost ||
-                builder.byteSize >= conf.maxBytesPerPost) flush()
-          }
-        }
-        flush()
-        failed.iterator
       }
-  }
-
-  /** Isolation-path encoding: (jsonRepr, bytesOrNull, encodeErrOrNull) per
-    * row. The JSON repr rides along so a dead-lettered row's
-    * original_message is always readable — binary rows included — and so a
-    * row the ENCODER rejects still reaches the DLQ with its content. */
-  private def rowBytesWithRepr(c: Config, df: DataFrame):
-      org.apache.spark.sql.Dataset[(String, Array[Byte], String)] = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.functions.struct
-    implicit val enc = Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.STRING)
-    c.format match {
-      case "RowBinary" =>
-        val types = df.columns.toSeq.map(n =>
-          CHType.parse(c.columnTypes.getOrElse(n, "String")))
-        df.select(jsonCol(df).as("__j"), struct(verbatimCols(df): _*).as("__r"))
-          .map { row =>
-            val j = row.getString(0)
-            try (j, RowBinaryEncoder.encode(row.getStruct(1), types), null: String)
-            catch { case e: Exception =>
-              (j, null: Array[Byte], Option(e.getMessage).getOrElse(e.toString))
-            }
+      def flush(): Unit = {
+        if (builder.rowCount > 0) {
+          try post(conf, query, builder.build())
+          catch {
+            case CHServerException(code, _) if ErrorClassifier.isRowDataFault(code) =>
+              replayRowwise()
           }
-      case _ =>
-        df.select(jsonCol(df)).as[String](Encoders.STRING)
-          .map(s => (s, (s + "\n").getBytes(UTF_8), null: String))
+        }
+        builder = new BlockBuilder(names, types)
+        chunk.clear()
+      }
+      it.foreach { r =>
+        builder.tryAppend(r) match {
+          case Some(err) => failed += ((r, err))
+          case None =>
+            chunk += r
+            if (builder.rowCount >= conf.maxRowsPerPost ||
+              builder.byteSize >= conf.maxBytesPerPost) flush()
+        }
+      }
+      flush()
+      failed.iterator
     }
   }
 

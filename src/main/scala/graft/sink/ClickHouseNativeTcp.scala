@@ -4,7 +4,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputSt
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 import graft.types.{CHType, NativeEncoder}
 
@@ -480,25 +480,18 @@ object ClickHouseNativeTcp {
     * single-block INSERT; poison rows come back as (jsonRow, error) in a
     * DISTRIBUTED dataset — nothing funnels through the driver. */
   def writeIsolating(c: Config)(df: DataFrame): Dataset[(String, String)] = {
-    import org.apache.spark.sql.Encoders
     val names = df.columns.toSeq
     val types = names.map(n => CHType.parse(c.columnTypes.getOrElse(n, "String")))
     val query = insertQuery(c, names)
     val conf = c
-    val jsonDf = df.select(
-      org.apache.spark.sql.functions.to_json(
-        org.apache.spark.sql.functions.struct(df.columns.toSeq.map(n =>
-          df.col(s"`${n.replace("`", "``")}`")): _*)).as("__json"),
-      org.apache.spark.sql.functions.struct(df.columns.toSeq.map(n =>
-        df.col(s"`${n.replace("`", "``")}`")): _*).as("__row"))
-    jsonDf.mapPartitions { it =>
+    ClickHouseHttp.failuresAsJson(df) { it =>
       if (!it.hasNext) Iterator.empty
       else {
-        val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
+        val failed = scala.collection.mutable.ArrayBuffer[(Row, String)]()
         var conn = new Conn(conf)
         def reconnect(): Unit = { try conn.close() catch { case _: Exception => () }; conn = new Conn(conf) }
         try {
-          val pending = scala.collection.mutable.ArrayBuffer[(String, org.apache.spark.sql.Row)]()
+          val pending = scala.collection.mutable.ArrayBuffer[Row]()
           var builder = new NativeEncoder.BlockBuilder(names, types)
           def flush(): Unit = if (builder.rowCount > 0 || pending.nonEmpty) {
             val rows = pending.toVector
@@ -511,38 +504,36 @@ object ClickHouseNativeTcp {
                   if ErrorClassifier.isRowDataFault(code) =>
                 reconnect()
                 // replay the block's rows one at a time, own INSERT each
-                rows.foreach { case (json, row) =>
+                rows.foreach { row =>
                   try {
                     val one = NativeEncoder.encodeSingleRow(names, types, row)
                     conn.insert(query, Iterator.single(one))
                   } catch {
                     case ClickHouseHttp.CHServerException(code2, msg2)
                         if ErrorClassifier.isRowDataFault(code2) =>
-                      failed += ((json, msg2))
+                      failed += ((row, msg2))
                       reconnect()
                     case e: IllegalArgumentException =>
-                      failed += ((json, Option(e.getMessage).getOrElse(e.toString)))
+                      failed += ((row, Option(e.getMessage).getOrElse(e.toString)))
                   }
                 }
               case e: Throwable => throw e
             }
           }
-          it.foreach { r =>
-            val json = r.getString(0)
-            val row = r.getStruct(1)
+          it.foreach { row =>
             builder.tryAppend(row) match {
               case None =>
-                pending += ((json, row))
+                pending += row
                 if (builder.rowCount >= conf.maxRowsPerBlock ||
                     builder.byteSize >= conf.maxBytesPerBlock) flush()
-              case Some(err) => failed += ((json, err)) // client-side reject
+              case Some(err) => failed += ((row, err)) // client-side reject
             }
           }
           flush()
         } finally conn.close()
         failed.iterator
       }
-    }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    }
   }
 
   private def blockIterator(names: Seq[String], types: Seq[CHType], c: Config,

@@ -35,8 +35,6 @@ object ClickHouseSink {
     versionMappings: Map[String, Seq[ColumnMapping]] = Map.empty,
     /** Per-insert ClickHouse settings for the HTTP leg (async_insert, ...). */
     httpSettings: Map[String, String] = Map.empty,
-    /** Wire encoding for the HTTP leg: JSONEachRow or RowBinary. */
-    httpFormat: String = "JSONEachRow",
     /** gzip INSERT bodies on the HTTP leg (Content-Encoding: gzip). */
     httpCompress: Boolean = false,
     /** TLS trust for the secure native port (`tcps://` URLs): base64-PEM
@@ -72,9 +70,8 @@ object ClickHouseSink {
   private[sink] def httpConfig(c: Config): ClickHouseHttp.Config =
     ClickHouseHttp.Config(endpoint = c.url, database = c.database,
       table = c.table, username = c.username, password = c.password,
-      settings = c.httpSettings, format = c.httpFormat,
-      compress = c.httpCompress,
-      // RowBinary needs the declared CH type per column; the union over
+      settings = c.httpSettings, compress = c.httpCompress,
+      // a Native block declares the CH type per column; the union over
       // version mappings is safe (a column keeps one type across versions)
       columnTypes = (c.mappings ++ c.versionMappings.values.flatten)
         .map(m => m.column -> m.chType).toMap,
@@ -140,29 +137,6 @@ object ClickHouseSink {
     * the value domain; a String mapping may feed a FixedString column —
     * the server enforces the width). */
   def validateAgainstTable(c: Config): Either[String, Unit] = {
-    // UNNAMED Tuple needs a positional wire format: Spark's JSON encoder
-    // writes a struct as an OBJECT keyed `_1`.._n, which no server setting
-    // maps back to tuple positions — fail at config time, not per batch
-    if (c.httpFormat != "RowBinary" && c.httpFormat != "Native") {
-      def unnamedTuple(t: graft.types.CHType): Boolean = {
-        import graft.types.CHType._
-        t match {
-          case tt: CHTuple => !tt.isNamed || tt.elems.exists(e => unnamedTuple(e._2))
-          case CHLowCardinality(i) => unnamedTuple(i)
-          case CHNullable(i) => unnamedTuple(i)
-          case CHArray(i) => unnamedTuple(i)
-          case CHMap(k, v) => unnamedTuple(k) || unnamedTuple(v)
-          case _ => false
-        }
-      }
-      val bad = (c.mappings ++ c.versionMappings.values.flatten).filter { m =>
-        try unnamedTuple(graft.types.CHType.parse(m.chType))
-        catch { case _: Exception => false }
-      }
-      if (bad.nonEmpty)
-        return Left(bad.map(m => s"column ${m.column}: unnamed Tuple type " +
-          s"${m.chType} requires the RowBinary or Native format").mkString("; "))
-    }
     val server =
       try ClickHouseHttp.describeTable(httpConfig(c)).toMap
       catch {
@@ -191,14 +165,10 @@ object ClickHouseSink {
               val st = strip(graft.types.CHType.parse(serverType))
               val mt = strip(graft.types.CHType.parse(m.chType))
               mt == st ||
-                // a plain-String mapping may feed FixedString on the
-                // JSONEachRow and Native legs (the server's converting
-                // insert enforces the width — Native blocks carry their
-                // own types). RowBinary has no block header: the server
-                // reads by TABLE type, so a String/FixedString
-                // disagreement there genuinely corrupts the framing
-                (c.httpFormat != "RowBinary" &&
-                  mt == graft.types.CHType.CHString &&
+                // a plain-String mapping may feed FixedString: Native
+                // blocks carry their own types and the server's
+                // converting insert enforces the width
+                (mt == graft.types.CHType.CHString &&
                   st.isInstanceOf[graft.types.CHType.CHFixedString])
             } catch { case _: Exception => true } // unparseable → server's call
           if (ok) None

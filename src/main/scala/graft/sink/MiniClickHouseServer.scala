@@ -2,11 +2,8 @@ package graft.sink
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, LocalDateTime, ZoneOffset}
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -17,15 +14,16 @@ import graft.types.CHType
   * lives in main so the wire bench can reach it) speaking the PUBLIC HTTP
   * interface the
   * production [[ClickHouseHttp]] leg targets: POST with `query=INSERT INTO
-  * db.table (cols) FORMAT JSONEachRow` in the URL params, body = data,
+  * db.table (cols) FORMAT Native` in the URL params, body = Native blocks,
   * credentials in X-ClickHouse-User/-Key, failures as HTTP error +
   * `X-ClickHouse-Exception-Code` header + `Code: N. DB::Exception: ...`
   * body — the same contract a real server exposes on :8123.
   *
-  * Unlike a mock, this fixture PARSES the INSERT it receives and VALIDATES
-  * every value against the declared ClickHouse column type (via the repo's
-  * own [[CHType]] domain: DateTime64(p,tz), LowCardinality, Map,
-  * Array(Map), Enum8/16, UUID, FixedString, Nullable), returning the real
+  * Unlike a mock, this fixture DECODES the blocks it receives with its own
+  * reader (independent of the client's encoder) and VALIDATES each
+  * column's declared type against the table's (via the repo's own
+  * [[CHType]] domain: DateTime64(p,tz), LowCardinality, Map, Array(Map),
+  * Enum8/16, UUID, FixedString, Nullable), returning the real
   * ClickHouse error code for each fault class — so [[ErrorClassifier]] is
   * exercised by genuine wire responses, the same method MiniKafkaBroker
   * uses for the source side. An INSERT is atomic: any bad value rejects
@@ -261,8 +259,10 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
                   val unknown = cols.filterNot(c => table.columns.exists(_.name == c))
                   if (unknown.nonEmpty) {
                     fail(ex, 404, 16, s"No such column ${unknown.head} in table $db.$tbl")
-                  } else if (fmt != "JSONEachRow" && fmt != "RowBinary" && fmt != "Native") {
-                    fail(ex, 400, 73, s"Unknown format $fmt")
+                  } else if (fmt != "Native") {
+                    // the client INSERTs Native only; the fixture decodes
+                    // nothing else
+                    fail(ex, 400, 48, s"fixture decodes only FORMAT Native, not $fmt")
                   } else {
                     try {
                       // insert_deduplicate semantics (real CH replicated
@@ -282,10 +282,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
                           """{"written_rows":"0"}""")
                         ok(ex, "")
                       } else {
-                        val parsed =
-                          if (fmt == "JSONEachRow") parseJsonEachRow(table, cols, body)
-                          else if (fmt == "Native") parseNative(table, cols, body)
-                          else parseRowBinary(table, cols, body)
+                        val parsed = parseNative(table, cols, body)
                         tables.synchronized {
                           table.accepted += parsed.count
                           if (retainRows) table.rows ++= parsed.rows
@@ -421,304 +418,13 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
 
   private[sink] def noteInsertAttempt(): Unit = insertAttempts += 1
 
-  // ------------------------------------------------------------ JSONEachRow
-
-  private def parseJsonEachRow(table: Table, cols: Seq[String], body: Array[Byte]): RowSlab = {
-    // stream the node sequence straight off the bytes: JSONEachRow is a
-    // concatenation of objects, no line materialization needed
-    val it =
-      try mapper.readerFor(classOf[com.fasterxml.jackson.databind.JsonNode])
-        .readValues[com.fasterxml.jackson.databind.JsonNode](body)
-      catch { case _: Exception => throw CHFault(27, "Cannot parse input") }
-    val colSet = cols.toSet
-    val declared = table.columns.filter(c => colSet(c.name))
-    val out = mutable.ArrayBuffer[Map[String, Any]]()
-    var n = 0L
-    try {
-      while (it.hasNext) {
-        val node =
-          try it.next()
-          catch { case _: Exception => throw CHFault(27, "Cannot parse input") }
-        val fields = node.fieldNames()
-        // fields present in the row but absent from the INSERT column list:
-        // the real server rejects them unless input_format_skip_unknown_fields
-        while (fields.hasNext) {
-          val f = fields.next()
-          if (!colSet(f))
-            throw CHFault(117, s"Unknown field found while parsing JSONEachRow format: $f")
-        }
-        // retainRows=false (bench mode): validate every value but skip the
-        // per-row Map materialization — the server must not measure its own
-        // allocations
-        if (retainRows)
-          out += declared.map { c =>
-            val v = if (node.has(c.name)) jsonValue(node.get(c.name)) else Absent
-            c.name -> validate(c.name, c.chType, v)
-          }.toMap
-        else declared.foreach { c =>
-          val v = if (node.has(c.name)) jsonValue(node.get(c.name)) else Absent
-          validate(c.name, c.chType, v); ()
-        }
-        n += 1
-      }
-    } finally it.close()
-    RowSlab(out.toSeq, n)
-  }
-
   private final case class RowSlab(rows: Seq[Map[String, Any]], count: Long)
 
-  private object Absent
-  private def jsonValue(n: com.fasterxml.jackson.databind.JsonNode): Any =
-    if (n.isNull) null
-    else if (n.isTextual) n.asText()
-    else if (n.isBoolean) n.asBoolean()
-    else if (n.isIntegralNumber) BigDecimal(n.bigIntegerValue())
-    else if (n.isNumber) BigDecimal(n.decimalValue())
-    else if (n.isObject)
-      n.fields().asScala.map(e => e.getKey -> jsonValue(e.getValue)).toMap
-    else if (n.isArray) n.elements().asScala.map(jsonValue).toVector
-    else n.toString
+  // ----------------------------------------------------------------- Native
 
-  // ------------------------------------------------------------- validation
-
-  private val uuidRe =
-    "^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$".r
-
-  /** Validate + canonicalize one value against a declared CH column type,
-    * throwing the REAL ClickHouse error code for each fault class.
-    * Absent fields and JSON nulls take the column default
-    * (input_format_defaults_for_omitted_fields / input_format_null_as_
-    * default, both on by default in a real server) — except Nullable,
-    * which stores NULL. */
-  private def validate(col: String, t: CHType, v: Any): Any = {
-    import CHType._
-    t match {
-      case CHNullable(inner) =>
-        if (v == null || v == Absent) null else validate(col, inner, v)
-      case CHLowCardinality(inner) => validate(col, inner, v)
-      case _ if v == null || v == Absent => defaultFor(t)
-      case CHString => v match {
-        case s: String => s
-        case b: Boolean => b.toString
-        case d: BigDecimal => d.bigDecimal.toPlainString // numbers-as-strings (default on)
-        case _ => throw CHFault(6, s"Cannot parse String from non-scalar for column $col")
-      }
-      case CHFixedString(n) => v match {
-        case s: String =>
-          if (s.getBytes(UTF_8).length > n)
-            throw CHFault(131, s"String too long for type FixedString($n): '$s' for column $col")
-          s
-        case _ => throw CHFault(6, s"Cannot parse FixedString($n) for column $col")
-      }
-      case CHBool => v match {
-        case b: Boolean => b
-        case d: BigDecimal if d == 0 || d == 1 => d == 1
-        case "true" | "1" => true
-        case "false" | "0" => false
-        case other => throw CHFault(467, s"Cannot parse bool from '$other' for column $col")
-      }
-      case CHInt(bits) => intValue(col, v, minOf(bits), maxOf(bits))
-      case CHUInt(bits) => intValue(col, v, BigDecimal(0), umaxOf(bits))
-      case CHDecimal(p, s) =>
-        val d = v match {
-          case d: BigDecimal => d
-          case str: String =>
-            try BigDecimal(str)
-            catch { case _: Exception => throw CHFault(72, s"Cannot parse decimal from '$str' for column $col") }
-          case other => throw CHFault(72, s"Cannot parse decimal from '$other' for column $col")
-        }
-        // canonical form = scaled to s (the wire stores the unscaled int);
-        // digit overflow is the real server's DECIMAL_OVERFLOW
-        val scaled = d.setScale(s, BigDecimal.RoundingMode.HALF_UP)
-        if (scaled.abs >= BigDecimal(BigInt(10).pow(p - s)))
-          throw CHFault(407, s"Decimal value $d overflows Decimal($p, $s) for column $col")
-        scaled
-      case CHDate => epochDay(col, v, 0L, 65535L, "Date")
-      case CHDate32 => epochDay(col, v,
-        java.time.LocalDate.of(1900, 1, 1).toEpochDay,
-        java.time.LocalDate.of(2299, 12, 31).toEpochDay, "Date32")
-      case CHFloat32 | CHFloat64 => v match {
-        case d: BigDecimal => d.toDouble
-        case s: String =>
-          try BigDecimal(s).toDouble
-          catch { case _: Exception => throw CHFault(72, s"Cannot parse number from '$s' for column $col") }
-        case other => throw CHFault(72, s"Cannot parse number from '$other' for column $col")
-      }
-      case CHEnum(_, values) => v match {
-        case s: String if values.contains(s) => s
-        case d: BigDecimal if values.exists(_._2 == d.toInt) =>
-          values.find(_._2 == d.toInt).get._1
-        case other => throw CHFault(691, s"Unknown element '$other' for enum column $col")
-      }
-      case CHUUID => v match {
-        case s: String if uuidRe.matches(s) => s.toLowerCase
-        case other => throw CHFault(376, s"Cannot parse uuid '$other' for column $col")
-      }
-      case CHDateTime(_) => parseDateTime(col, v, 0)
-      case CHDateTime64(p, _) => parseDateTime(col, v, p)
-      case CHMap(_, vt) => v match {
-        case m: Map[_, _] => m.map { case (k, mv) =>
-          String.valueOf(k) -> validate(s"$col value", vt, mv)
-        }
-        case other => throw CHFault(117, s"Cannot parse Map from '$other' for column $col")
-      }
-      case CHArray(inner) => v match {
-        case xs: Vector[_] => xs.map(e => validate(s"$col element", inner, e))
-        case other => throw CHFault(130, s"Cannot read array from '$other' for column $col")
-      }
-      case CHIPv4 => v match {
-        // string literal, or the raw UInt32 (both accepted by the server)
-        case s: String => graft.types.IpCodec.canonicalV4(s).getOrElse(
-          throw CHFault(441, s"Invalid IPv4 value '$s' for column $col"))
-        case d: BigDecimal if d.isWhole && d >= 0 && d <= BigDecimal(4294967295L) =>
-          graft.types.IpCodec.formatV4(d.toLongExact)
-        case other => throw CHFault(441, s"Invalid IPv4 value '$other' for column $col")
-      }
-      case CHIPv6 => v match {
-        case s: String => graft.types.IpCodec.canonicalV6(s).getOrElse(
-          throw CHFault(441, s"Invalid IPv6 value '$s' for column $col"))
-        case other => throw CHFault(441, s"Invalid IPv6 value '$other' for column $col")
-      }
-      case t @ CHTuple(elems) => v match {
-        // named tuples arrive as JSON objects (input_format_json_named_
-        // tuples_as_objects, default on); positional arrays work for both
-        case m: Map[_, _] if t.isNamed =>
-          val in = m.asInstanceOf[Map[String, Any]]
-          val extra = in.keySet -- t.elementNames.toSet
-          if (extra.nonEmpty)
-            throw CHFault(117, s"Unknown tuple element(s) ${extra.mkString(",")} for column $col")
-          t.elementNames.zip(elems).map { case (n, (_, et)) =>
-            n -> validate(s"$col.$n", et, in.getOrElse(n, Absent))
-          }.toMap
-        case xs: Vector[_] =>
-          if (xs.length != elems.length)
-            throw CHFault(53, s"Tuple arity ${xs.length} != ${elems.length} for column $col")
-          val vals = xs.zip(elems).zipWithIndex.map { case ((e, (_, et)), i) =>
-            validate(s"$col.${i + 1}", et, e)
-          }
-          if (t.isNamed) t.elementNames.zip(vals).toMap else vals
-        case other => throw CHFault(53, s"Cannot parse Tuple from '$other' for column $col")
-      }
-    }
-  }
-
-  private def intValue(col: String, v: Any, lo: BigDecimal, hi: BigDecimal): Any = {
-    val d = v match {
-      case d: BigDecimal => d
-      case s: String =>
-        try BigDecimal(s)
-        catch { case _: Exception => throw CHFault(72, s"Cannot parse number from '$s' for column $col") }
-      case b: Boolean => BigDecimal(if (b) 1 else 0)
-      case other => throw CHFault(72, s"Cannot parse number from '$other' for column $col")
-    }
-    if (!d.isWhole) throw CHFault(72, s"Cannot parse integer from '$d' for column $col")
-    if (d < lo || d > hi)
-      throw CHFault(321, s"Value $d is out of range of data type for column $col")
-    d.toBigInt
-  }
-
-  /** Date/Date32 canonical form: epoch day (Long), parsed from ISO date
-    * strings or day-ordinal numbers, range-checked to the type's domain. */
-  private def epochDay(col: String, v: Any, lo: Long, hi: Long, tn: String): Long = {
-    val day: Long = v match {
-      case d: BigDecimal if d.isWhole => d.toLong
-      case s: String =>
-        try java.time.LocalDate.parse(s.trim).toEpochDay
-        catch { case _: Exception =>
-          throw CHFault(38, s"Cannot parse date '$s' for column $col") }
-      case other => throw CHFault(38, s"Cannot parse date '$other' for column $col")
-    }
-    if (day < lo || day > hi)
-      throw CHFault(321, s"Value $day is out of range of type $tn for column $col")
-    day
-  }
-
-  private def minOf(bits: Int) = BigDecimal(BigInt(-1) << (bits - 1))
-  private def maxOf(bits: Int) = BigDecimal((BigInt(1) << (bits - 1)) - 1)
-  private def umaxOf(bits: Int) = BigDecimal((BigInt(1) << bits) - 1)
-
-  /** best_effort datetime parse: ISO-8601 (T or space separator, optional
-    * fraction/offset — what Spark's JSON encoder and the feature files
-    * emit) or epoch seconds. Returns epoch micros truncated to precision. */
-  private def parseDateTime(col: String, v: Any, precision: Int): Long = {
-    val micros: Long = v match {
-      case d: BigDecimal => (d * 1000000L).toLong
-      case s: String =>
-        val t = s.trim.replace(' ', 'T')
-        val inst =
-          try {
-            if (t.contains("+") || t.endsWith("Z") || t.lastIndexOf('-') > 9)
-              java.time.OffsetDateTime.parse(t).toInstant
-            else LocalDateTime.parse(t, DateTimeFormatter.ISO_LOCAL_DATE_TIME)
-              .toInstant(ZoneOffset.UTC)
-          } catch {
-            case _: Exception =>
-              throw CHFault(41, s"Cannot parse datetime '$s' for column $col")
-          }
-        inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-      case other => throw CHFault(41, s"Cannot parse datetime '$other' for column $col")
-    }
-    val unit = math.pow(10, (6 - math.min(precision, 6)).toDouble).toLong
-    // floorDiv: sub-precision digits on a PRE-EPOCH value must round down
-    // (toward -inf), matching the RowBinary tick encoding — truncation
-    // toward zero would store the two wire formats a tick apart
-    Math.floorDiv(micros, unit) * unit
-  }
-
-  private def defaultFor(t: CHType): Any = {
-    import CHType._
-    t match {
-      case CHString | CHFixedString(_) => ""
-      case CHBool => false
-      case CHInt(_) | CHUInt(_) => BigInt(0)
-      case CHFloat32 | CHFloat64 => 0.0
-      case CHDecimal(_, s) => BigDecimal(0).setScale(s)
-      case CHDate | CHDate32 => 0L
-      case CHEnum(_, values) => values.minByOption(_._2).map(_._1).getOrElse("")
-      case CHUUID => "00000000-0000-0000-0000-000000000000"
-      case CHDateTime(_) | CHDateTime64(_, _) => 0L
-      case CHMap(_, _) => Map.empty[String, Any]
-      case CHArray(_) => Vector.empty
-      case CHIPv4 => "0.0.0.0"
-      case CHIPv6 => "::"
-      case t @ CHTuple(elems) =>
-        val defaults = elems.map(e => defaultFor(e._2))
-        if (t.isNamed) t.elementNames.zip(defaults).toMap else defaults.toVector
-      case CHLowCardinality(i) => defaultFor(i)
-      case CHNullable(_) => null
-    }
-  }
-
-  // -------------------------------------------------------------- RowBinary
-
-  /** RowBinary decode against the declared column types — the public
-    * column-order binary format (varint-length strings, little-endian
-    * fixed-width numerics, uint32/int64 datetimes, big-endian-halved UUID,
-    * varint-counted arrays/maps, nullable flag byte). */
-  private def parseRowBinary(table: Table, cols: Seq[String], body: Array[Byte]): RowSlab = {
-    val in = new RowBinaryReader(body)
-    val out = mutable.ArrayBuffer[Map[String, Any]]()
-    val colTypes = cols.map(c => c -> table.columns.find(_.name == c).get.chType)
-    var n = 0L
-    try {
-      while (in.hasMore) {
-        if (retainRows)
-          out += colTypes.map { case (name, t) =>
-            name -> readBinary(in, t, name)
-          }.toMap
-        else // bench fixture: validating walk, no value materialization
-          colTypes.foreach { case (name, t) => validateBinary(in, t, name) }
-        n += 1
-      }
-    } catch {
-      // a row truncated mid-value: the real server's CANNOT_READ_ALL_DATA
-      case _: IndexOutOfBoundsException =>
-        throw CHFault(33, s"Cannot read all data: truncated RowBinary row after $n rows")
-    }
-    RowSlab(out.toSeq, n)
-  }
-
-  private def readBinary(in: RowBinaryReader, t: CHType, col: String): Any = {
+  /** One scalar value's decode to its canonical store form — the
+    * per-value layout Native columns share with RowBinary. */
+  private def readBinary(in: BlockReader, t: CHType, col: String): Any = {
     import CHType._
     t match {
       case CHString => in.str()
@@ -738,7 +444,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
       case CHFloat64 => java.lang.Double.longBitsToDouble(in.i64())
       case CHDecimal(p, s) =>
         // scaled little-endian two's-complement int of the width the
-        // precision implies — canonical form matches the JSON leg's
+        // precision implies
         val width = if (p <= 9) 4 else if (p <= 18) 8 else 16
         val le = in.take(width)
         val be = le.reverse
@@ -759,25 +465,11 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
         val unit = math.pow(10, (6 - math.min(p, 6)).toDouble).toLong
         if (p <= 6) ticks * unit
         else ticks / math.pow(10, (p - 6).toDouble).toLong
-      case CHLowCardinality(inner) => readBinary(in, inner, col)
-      case CHNullable(inner) =>
-        if (in.u8() == 1) null else readBinary(in, inner, col)
-      case CHMap(_, vt) =>
-        val n = in.varint()
-        (0L until n).map(_ => in.str() -> readBinary(in, vt, col)).toMap
-      case CHArray(inner) =>
-        val n = in.varint()
-        (0L until n).map(_ => readBinary(in, inner, col)).toVector
       case CHIPv4 => graft.types.IpCodec.formatV4(in.i32() & 0xffffffffL)
       case CHIPv6 => graft.types.IpCodec.formatV6(in.take(16))
-      case t @ CHTuple(elems) =>
-        // positional element values back to back, no count byte
-        val vals = elems.map(e => readBinary(in, e._2, col)).toVector
-        if (t.isNamed) t.elementNames.zip(vals).toMap else vals
+      case other => throw CHFault(50, s"${CHType.render(other)} is not a scalar type in column $col")
     }
   }
-
-  // ----------------------------------------------------------------- Native
 
   /** Native-format decode: columnar blocks (`varint n_cols, varint n_rows`,
     * then per column name, declared type text, column-major data). Per-value
@@ -788,7 +480,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     * step: equal modulo LowCardinality wrappers (a block sends LC columns
     * as their inner type), plus non-nullable into Nullable. */
   private def parseNative(table: Table, cols: Seq[String], body: Array[Byte]): RowSlab = {
-    val in = new RowBinaryReader(body)
+    val in = new BlockReader(body)
     val out = mutable.ArrayBuffer[Map[String, Any]]()
     var total = 0L
     try {
@@ -835,9 +527,11 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
           // data (array offsets included) — so Array(LowCardinality(T))
           // reads version, offsets, then the flattened dictionary body
           if (nrows > 0) readLcVersions(in, declared, name)
-          if (retainRows || fsWidth.isDefined)
-            name -> widthCheck(readNativeColumn(in, declared, nrows, name))
-          else {
+          if (retainRows || fsWidth.isDefined) {
+            val vals = widthCheck(readNativeColumn(in, declared, nrows, name))
+            name -> (if (!castsToString(declared, tcol.chType)) vals
+              else vals.map(v => if (v == null) null else String.valueOf(v)))
+          } else {
             validateNativeColumn(in, declared, nrows, name)
             name -> (null: IndexedSeq[Any])
           }
@@ -856,9 +550,10 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
   }
 
   /** Block column type vs table column type: equal modulo LowCardinality;
-    * a non-nullable block column may feed a Nullable table column, and a
-    * String block column may feed a FixedString(n) table column — the
-    * real server inserts converting actions for all three (values are
+    * a non-nullable block column may feed a Nullable table column, a
+    * String block column a FixedString(n) table column, and the scalars
+    * of [[castsToString]] a String column — the real server inserts
+    * converting actions for all of them (FixedString values are
     * width-checked per row in [[parseNative]], answering 131 for an
     * overlong value exactly like a direct FixedString insert). */
   private def nativeCompatible(block: CHType, tbl: CHType): Boolean = {
@@ -874,29 +569,42 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     val (b, t) = (stripLC(block), stripLC(tbl))
     b == t ||
       (t match { case CHNullable(i) => b == i; case _ => false }) ||
-      ((b, t) match { case (CHString, CHFixedString(_)) => true; case _ => false })
+      ((b, t) match { case (CHString, CHFixedString(_)) => true; case _ => false }) ||
+      castsToString(block, tbl)
+  }
+
+  private def stripWrappers(t: CHType): CHType = t match {
+    case CHType.CHLowCardinality(i) => stripWrappers(i)
+    case CHType.CHNullable(i) => stripWrappers(i)
+    case x => x
+  }
+
+  /** A scalar block column a real server CASTs into a String table column
+    * on insert (input_format_native_allow_types_conversion, on by
+    * default) — a UUID mapping may feed a String column. The decoded
+    * canonical value's text is the cast's result. */
+  private def castsToString(block: CHType, tbl: CHType): Boolean = {
+    import CHType._
+    (stripWrappers(block), stripWrappers(tbl)) match {
+      case (CHUUID | CHEnum(_, _) | CHIPv4 | CHIPv6 | CHInt(_) | CHUInt(_) | CHBool,
+            CHString) => true
+      case _ => false
+    }
   }
 
   /** The FixedString width the table imposes on a String block column
     * (the converting-insert case), or None when no width check applies. */
-  private def fixedStringWidthOf(block: CHType, tbl: CHType): Option[Int] = {
-    import CHType._
-    def strip(t: CHType): CHType = t match {
-      case CHLowCardinality(i) => strip(i)
-      case CHNullable(i) => strip(i)
-      case x => x
-    }
-    (strip(block), strip(tbl)) match {
-      case (CHString, CHFixedString(w)) => Some(w)
+  private def fixedStringWidthOf(block: CHType, tbl: CHType): Option[Int] =
+    (stripWrappers(block), stripWrappers(tbl)) match {
+      case (CHType.CHString, CHType.CHFixedString(w)) => Some(w)
       case _ => None
     }
-  }
 
   /** Consume the u64 keys-serialization version of every dictionary-form
     * LC in the column's declared type, prefix order — written before any
     * bulk data (the fixture-side mirror of ClickHouse's substream state
     * prefixes; independently implemented from NativeDecoder's walker). */
-  private def readLcVersions(in: RowBinaryReader, t: CHType, col: String): Unit = {
+  private def readLcVersions(in: BlockReader, t: CHType, col: String): Unit = {
     import CHType._
     t match {
       case CHLowCardinality(_) =>
@@ -919,7 +627,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     * additional-keys layout, separate from the production NativeDecoder,
     * so the client's encoder is never validated by its own decoder.
     * Returns the per-row values. */
-  private def readLcDictColumn(in: RowBinaryReader, inner: CHType, n: Int,
+  private def readLcDictColumn(in: BlockReader, inner: CHType, n: Int,
                                col: String, retain: Boolean = true): IndexedSeq[Any] = {
     import CHType._
     val (base, nullable) = inner match {
@@ -967,7 +675,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     }
   }
 
-  private def readNativeColumn(in: RowBinaryReader, t: CHType, n: Int,
+  private def readNativeColumn(in: BlockReader, t: CHType, n: Int,
                                col: String): IndexedSeq[Any] = {
     import CHType._
     t match {
@@ -1020,7 +728,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     * reader's bound check → fault 33) — while infallible decodes (any 8
     * bytes are a legal Int64/Float64; ClickHouse String is raw bytes) are
     * skipped by width. Unknown shapes fall back to the full decode. */
-  private def validateNativeColumn(in: RowBinaryReader, t: CHType, n: Int,
+  private def validateNativeColumn(in: BlockReader, t: CHType, n: Int,
                                    col: String): Unit = {
     import CHType._
     t match {
@@ -1071,40 +779,7 @@ final class MiniClickHouseServer(user: String = "default", password: String = ""
     }
   }
 
-  /** RowBinary row-major counterpart of [[validateNativeColumn]]: one
-    * value's validating skip. Same kept/skipped check set. */
-  private def validateBinary(in: RowBinaryReader, t: CHType, col: String): Unit = {
-    import CHType._
-    t match {
-      case CHString => in.skip(in.varint())
-      case CHFixedString(w) => in.skip(w.toLong)
-      case CHBool | CHInt(8) | CHUInt(8) => in.skip(1L)
-      case CHInt(16) | CHUInt(16) | CHDate => in.skip(2L)
-      case CHInt(32) | CHUInt(32) | CHFloat32 | CHDateTime(_) | CHDate32 | CHIPv4 =>
-        in.skip(4L)
-      case CHInt(64) | CHUInt(64) | CHFloat64 | CHDateTime64(_, _) => in.skip(8L)
-      case CHDecimal(p, _) => in.skip(if (p <= 9) 4L else if (p <= 18) 8L else 16L)
-      case CHEnum(bits, values) =>
-        val id = if (bits == 8) in.u8().toByte.toInt else in.i16()
-        if (!values.exists(_._2 == id))
-          throw CHFault(691, s"Unknown enum id $id for column $col")
-      case CHUUID | CHIPv6 => in.skip(16L)
-      case CHLowCardinality(inner) => validateBinary(in, inner, col)
-      case CHNullable(inner) => if (in.u8() != 1) validateBinary(in, inner, col)
-      case CHMap(_, vt) =>
-        val n = in.varint()
-        var i = 0L
-        while (i < n) { in.skip(in.varint()); validateBinary(in, vt, col); i += 1 }
-      case CHArray(inner) =>
-        val n = in.varint()
-        var i = 0L
-        while (i < n) { validateBinary(in, inner, col); i += 1 }
-      case CHTuple(elems) => elems.foreach(e => validateBinary(in, e._2, col))
-      case other => readBinary(in, other, col); ()
-    }
-  }
-
-  private final class RowBinaryReader(buf: Array[Byte]) {
+  private final class BlockReader(buf: Array[Byte]) {
     private var pos = 0
     def hasMore: Boolean = pos < buf.length
     def u8(): Int = { val v = buf(pos) & 0xff; pos += 1; v }

@@ -669,10 +669,7 @@ private[clickhouse] final class ChDataWriter(
   extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   private val names = colTypes.map(_._1)
   private val types = colTypes.map(t => CHType.parse(t._2))
-  private val query = {
-    val cc = c.copy(format = "Native")
-    ClickHouseHttp.insertQuery(cc, names)
-  }
+  private val query = ClickHouseHttp.insertQuery(c, names)
   private val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
     .createToScalaConverter(schema)
   private var builder = new graft.types.NativeEncoder.BlockBuilder(names, types)

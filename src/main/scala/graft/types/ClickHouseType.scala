@@ -86,8 +86,8 @@ object CHType {
   }
   /** Tuple(T1, T2, …) / Tuple(n1 T1, n2 T2, …). Named elements
     * materialize as a Spark struct with those field names; unnamed as
-    * `_1`.._n (the names Spark needs but the wire never sees — RowBinary
-    * and Native lay tuple elements out positionally). ClickHouse requires
+    * `_1`.._n (the names Spark needs but the wire never sees — Native
+    * lays tuple elements out positionally). ClickHouse requires
     * all-named or all-unnamed, enforced at parse. */
   final case class CHTuple(elems: Seq[(Option[String], CHType)]) extends CHType {
     def isNamed: Boolean = elems.nonEmpty && elems.forall(_._1.isDefined)

@@ -11,15 +11,13 @@ import org.apache.spark.sql.Row
   * reaches the same layout through clickhouse-go's native TCP batches
   * (internal/client/clickhouse.go, internal/batch/clickhouse/batch.go);
   * Native-over-HTTP is the documented equivalent that needs no protocol
-  * handshake.
-  *
-  * Why beyond RowBinary: column-major means one type dispatch per COLUMN
+  * handshake. It is the only INSERT encoding the sink speaks, over HTTP
+  * and native TCP alike: column-major means one type dispatch per COLUMN
   * per block instead of per value, contiguous same-width runs, and the
-  * server ingests the block without per-row reassembly — the next step in
-  * wire efficiency after RowBinary halved JSONEachRow's bytes.
+  * server ingests the block without per-row reassembly.
   *
-  * Per-VALUE byte layouts for scalars are identical to RowBinary (shared
-  * via [[RowBinaryEncoder.writeValue]]); the structural differences are
+  * Per-VALUE byte layouts for scalars are RowBinary's (written by
+  * [[RowBinaryEncoder.writeValue]]); the structural layouts are
   * Native's: Nullable = null-mask bytes for all rows FIRST then inner
   * values, Array = u64 cumulative offsets then flattened inner column,
   * Map = u64 offsets then the key column then the value column.
@@ -36,17 +34,6 @@ import org.apache.spark.sql.Row
   * reject (FixedString overflow, Decimal overflow, enum miss) skips just
   * that row and the block stays well-formed. */
 object NativeEncoder {
-
-  /** Bench/test A/B knob: `SPARK_GRAFT_LC_ENCODE=plain` (env, for forked
-    * bench JVMs) or system property `graft.lc.encode=plain` (for
-    * in-process tests) forces every top-level LowCardinality column to
-    * ship the plain inner form (the pre-dictionary behavior, server
-    * converts on insert) so the dictionary encoder's CPU-vs-bytes trade
-    * can be measured in isolation on the same workload. Each writer
-    * captures it once at construction — never set in production paths. */
-  private[types] def forcePlainLc: Boolean =
-    sys.props.get("graft.lc.encode").orElse(sys.env.get("SPARK_GRAFT_LC_ENCODE"))
-      .exists(_.equalsIgnoreCase("plain"))
 
   /** Growable byte buffer whose write position can be rolled back — the
     * primitive the per-row atomicity needs (ByteArrayOutputStream can only
@@ -77,7 +64,7 @@ object NativeEncoder {
     def declaredType: Option[String] = None
   }
 
-  /** All scalar CH types share RowBinary's per-value layout; contiguous
+  /** Scalar CH types use RowBinary's per-value layout; contiguous
     * values ARE the Native column. */
   private final class ScalarWriter(t: CHType) extends ColWriter {
     private val buf = new Buf
@@ -138,7 +125,7 @@ object NativeEncoder {
   /** Map(K, V) is Array(Tuple(K, V)) on the wire: offsets, then the key
     * column, then the value column. Values arrive stringified (the sink
     * mapper's coerce-to-String contract) and re-parse to the declared wire
-    * type, like RowBinary's map leg. */
+    * type. */
   private final class MapWriter(kt: CHType, vt: CHType, keys: ColWriter, vals: ColWriter)
       extends ColWriter {
     private val offsets = new Buf
@@ -312,10 +299,7 @@ object NativeEncoder {
       32L + dictBuf.position + keys.size.toLong * (1 << widthCode)
     private def plainFormBytes: Long =
       (if (nullable) keys.size.toLong else 0L) + plainValueBytes
-    /** A/B knob snapshot (see [[forcePlainLc]]), taken per writer so the
-      * per-row byteSize path never re-reads props/env. */
-    private val forcePlain = forcePlainLc
-    private def useDict: Boolean = !forcePlain && dictFormBytes < plainFormBytes
+    private def useDict: Boolean = dictFormBytes < plainFormBytes
     def byteSize: Long = if (useDict) dictFormBytes else plainFormBytes
     override def declaredType: Option[String] =
       if (useDict) Some(s"LowCardinality(${wireType(inner)})") else None

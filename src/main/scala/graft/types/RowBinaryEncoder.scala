@@ -3,41 +3,24 @@ package graft.types
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.Row
-
-/** ClickHouse RowBinary encoder — the public column-order binary INSERT
-  * format (varint-length strings, little-endian fixed-width numerics,
-  * uint32 DateTime / int64 DateTime64 ticks, UUID as two little-endian
-  * u64 halves, varint-counted Array/Map, Nullable flag byte). The
-  * reference's native-protocol batch append
-  * (internal/batch/clickhouse/batch.go:60-80) is the same columnar-binary
-  * idea; RowBinary is its documented HTTP-interface equivalent and
-  * roughly halves wire volume vs JSONEachRow — at 100 TB the INSERT
-  * bytes are the sink's network bill.
+/** ClickHouse's per-value binary layout — the one RowBinary uses and
+  * every scalar column of a Native block repeats back to back
+  * (varint-length strings, little-endian fixed-width numerics, uint32
+  * DateTime / int64 DateTime64 ticks, UUID as two little-endian u64
+  * halves). [[NativeEncoder]] writes each scalar value through
+  * [[writeValue]]; its own writers lay out Nullable, LowCardinality,
+  * Array, Map and Tuple columns.
   *
   * Values come from [[graft.sink.SinkMapper]] output, so each column's
   * Spark type is exactly `CHType.sparkType`; a null in a non-Nullable
-  * column encodes the ClickHouse column default (the server's
-  * input_format_null_as_default contract, mirrored client-side). */
+  * column encodes the type's default (zero, empty, epoch), as
+  * clickhouse-go does. An out-of-domain value throws in the server's
+  * `Code: NNN` form, so poison isolation dead-letters that row. */
 object RowBinaryEncoder {
-
-  def encode(row: Row, types: Seq[CHType]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(256)
-    var i = 0
-    while (i < types.length) {
-      writeValue(out, types(i), if (row.isNullAt(i)) null else row.get(i))
-      i += 1
-    }
-    out.toByteArray
-  }
 
   private[types] def writeValue(out: ByteArrayOutputStream, t: CHType, v: Any): Unit = {
     import CHType._
     t match {
-      case CHNullable(inner) =>
-        if (v == null) out.write(1)
-        else { out.write(0); writeValue(out, inner, v) }
-      case CHLowCardinality(inner) => writeValue(out, inner, v)
       case CHString =>
         str(out, if (v == null) "" else String.valueOf(v))
       case CHFixedString(n) =>
@@ -148,40 +131,11 @@ object RowBinaryEncoder {
                 s"Code: 441. DB::Exception: Invalid IPv6 value '$v'"))
           }
         out.write(b, 0, b.length)
-      case t @ CHTuple(elems) =>
-        // positional element values back to back — no count on the wire;
-        // a null tuple writes each element's default (non-Nullable column
-        // contract, same as the scalar branches)
-        v match {
-          case null => elems.foreach { case (_, et) => writeValue(out, et, null) }
-          case r: Row =>
-            if (r.length != elems.length)
-              throw new IllegalArgumentException(
-                s"Code: 53. DB::Exception: Tuple arity ${r.length} != ${elems.length}")
-            var i = 0
-            while (i < elems.length) {
-              writeValue(out, elems(i)._2, if (r.isNullAt(i)) null else r.get(i))
-              i += 1
-            }
-          case other => throw new IllegalArgumentException(
-            s"Code: 53. DB::Exception: Cannot convert ${other.getClass.getSimpleName} to ${CHType.render(t)}")
-        }
-      case CHMap(_, vt) =>
-        val m = if (v == null) Map.empty[Any, Any]
-          else v.asInstanceOf[scala.collection.Map[Any, Any]]
-        varint(out, m.size.toLong)
-        m.foreach { case (k, mv) =>
-          str(out, String.valueOf(k))
-          // Map values arrive STRINGIFIED (the sink mapper's coerce-to-
-          // String contract, CHType.CHMap.sparkType = Map(String,String));
-          // re-parse to the declared wire type — encoding the string raw
-          // against a numeric declared type would corrupt the row framing
-          writeValue(out, vt, if (mv == null) null else reparse(vt, String.valueOf(mv)))
-        }
-      case CHArray(inner) =>
-        val xs = if (v == null) Seq.empty[Any] else v.asInstanceOf[scala.collection.Seq[Any]]
-        varint(out, xs.size.toLong)
-        xs.foreach(e => writeValue(out, inner, e))
+      case other =>
+        // Nullable, LowCardinality, Array, Map and Tuple columns have
+        // their own Native writers; only their scalar leaves reach here
+        throw new IllegalArgumentException(
+          s"Code: 53. DB::Exception: ${CHType.render(other)} is not a scalar type")
     }
   }
 
@@ -244,9 +198,9 @@ object RowBinaryEncoder {
       case CHMap(_, _) | CHArray(_) | CHTuple(_) =>
         // stringify JSON-encodes nested complex values; a Map whose value
         // type is itself complex cannot round-trip through the string
-        // contract — declare Map(String, String) or use JSONEachRow
+        // contract — declare Map(String, String)
         throw new IllegalArgumentException(
-          "Code: 6. DB::Exception: RowBinary Map values of complex type are " +
+          "Code: 6. DB::Exception: Map values of complex type are " +
             "not supported by the String-coercion mapping contract")
     }
   }

@@ -119,6 +119,46 @@ class PipelineWireSpec extends SparkSpec {
     } finally { kafka.stop(); ch.stop() }
   }
 
+  test("a config-created pipeline INSERTs FORMAT Native over the HTTP leg") {
+    val id = "native-default-pipeline"
+    val kafka = new Cluster(); kafka.addBroker()
+    val ch = new MiniClickHouseServer(); ch.start()
+    try {
+      kafka.addPartition("nd_topic", 0)
+      ch.createTable("default", "nd", Seq("id" -> "String", "n" -> "Int64"))
+      kafka.append("nd_topic", 0, Seq(
+        "1" -> """{"id": "a", "n": 1}""", "2" -> """{"id": "b", "n": 2}"""))
+      val cfgJson =
+        s"""{"pipeline_id": "$id",
+           |  "source": {"kind": "kafka", "brokers": ["broker:9092"],
+           |    "topics": [{"name": "nd_topic",
+           |      "schema_fields": [{"name": "id", "type": "string"},
+           |                        {"name": "n", "type": "int64"}]}]},
+           |  "sink": {"url": "${ch.endpoint}", "database": "default",
+           |    "table": "nd", "max_delay_seconds": 0,
+           |    "table_mapping": [
+           |      {"field_name": "id", "column_name": "id", "column_type": "String"},
+           |      {"field_name": "n", "column_name": "n", "column_type": "Int64"}]}}
+           |""".stripMargin
+      markExisting()
+      val svc = new PipelineService(spark,
+        checkpointRoot = Some(Files.createTempDirectory("graft_nd_ckpt").toString),
+        sourceReader = wireReader(kafka.brokerList.head.address))
+      assert(svc.create(ReferenceConfig.fromJson(cfgJson)).isRight)
+      val started = svc.startFromConfig(id)
+      assert(started.isRight, started.swap.getOrElse(""))
+      try {
+        drainNew()
+        assert(ch.rows("default", "nd").map(r => (r("id"), r("n"))).toSet ==
+          Set(("a", BigInt(1)), ("b", BigInt(2))))
+        val inserts = ch.receivedQueries.toArray.toSeq
+          .map(_.asInstanceOf[(String, Map[String, String])]._1)
+        assert(inserts.nonEmpty && inserts.forall(_.endsWith("FORMAT Native")),
+          s"every INSERT must be Native: $inserts")
+      } finally { svc.terminate(id); () }
+    } finally { kafka.stop(); ch.stop() }
+  }
+
   test("pipeline over the NATIVE TCP sink leg: dedup + poison DLQ land identically") {
     // same feature topology, but the sink speaks ClickHouse's :9000 native
     // protocol (tcp:// scheme → streamed block INSERTs) against the TCP

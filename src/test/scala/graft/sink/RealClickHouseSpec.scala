@@ -62,7 +62,7 @@ class RealClickHouseSpec extends SparkSpec {
     ClickHouseSink.writeBatch(ClickHouseSink.Config(
       url = url, database = db, table = table, username = user, password = pass,
       mappings = cols.map { case (n, t) => ColumnMapping(n, n, t) },
-      httpFormat = "Native", tcpCompress = tcpCompress))(df)
+      tcpCompress = tcpCompress))(df)
   }
 
   private def reader(table: String, url: String) =
@@ -174,7 +174,7 @@ class RealClickHouseSpec extends SparkSpec {
         }.toDF("id", "k", "kn", "tags")
         ClickHouseSink.writeBatch(ClickHouseSink.Config(
           url = url.get, database = db, table = t, username = user,
-          password = pass, httpFormat = "Native",
+          password = pass,
           mappings = Seq(ColumnMapping("id", "id", "Int64"),
             ColumnMapping("k", "k", "LowCardinality(String)"),
             ColumnMapping("kn", "kn", "LowCardinality(Nullable(String))"),

@@ -1,18 +1,18 @@
 package graft.sink
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import graft.SparkSpec
 import graft.sink.SinkMapper.ColumnMapping
 
-/** Cross-format wire property: the SAME randomized rows inserted over the
-  * ClickHouse HTTP leg once as RowBinary and once as JSONEachRow must
-  * store IDENTICALLY. The two encodings share no code — RowBinary is
-  * [[graft.types.RowBinaryEncoder]] (hand-rolled binary) and JSONEachRow
-  * is Spark's JSON writer + the fixture's Jackson parse — so agreement
-  * across 200 seeded-random rows per run is strong evidence both are
-  * right (an encoder bug and a matching decoder bug in BOTH formats at
-  * once is the only false-pass). */
+/** Wire property for the Native INSERT leg: 200 seeded-random rows over
+  * 22 column types go through the sink's mapper and Native encoder to the
+  * fixture, whose own block reader decodes them; every stored value must
+  * equal a store-form model computed here straight from the generated
+  * values (no encoder or decoder of the repo's in the loop). The suite
+  * keeps its name from the RowBinary per-value layout Native's scalar
+  * columns use. */
 class RowBinaryPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,47 +79,54 @@ class RowBinaryPropertySpec extends SparkSpec {
     )
   }
 
-  test("200 seeded-random rows store identically over RowBinary, JSONEachRow and Native") {
+  private val columns = schema.map(_._1)
+
+  /** RFC 5952 text of an 8-group IPv6 literal: lower-case, no leading
+    * zeros, the longest run (>= 2, first on a tie) of zero groups as `::`. */
+  private def ipv6Text(s: String): String = {
+    val g = s.split(":").map(x => Integer.parseInt(x, 16))
+    var best = -1
+    var bestLen = 1
+    var i = 0
+    while (i < 8) {
+      var j = i
+      while (j < 8 && g(j) == 0) j += 1
+      if (j - i > bestLen) { best = i; bestLen = j - i }
+      i = math.max(j, i + 1)
+    }
+    val hex = g.map(Integer.toHexString)
+    if (best < 0) hex.mkString(":")
+    else hex.take(best).mkString(":") + "::" + hex.drop(best + bestLen).mkString(":")
+  }
+
+  private def micros(t: java.sql.Timestamp) =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  test("200 seeded-random rows x 22 types inserted as Native store the expected values") {
     val ch = new MiniClickHouseServer()
     ch.start()
     try {
-      ch.createTable("default", "t_rb", schema)
-      ch.createTable("default", "t_json", schema)
       ch.createTable("default", "t_native", schema)
       val seed = 20260815L // deterministic: failures must reproduce
       val rows = randomRows(new Random(seed), 200)
-      val df = rows.toDF("id", "s", "fs", "b", "i32", "u16", "f32", "f64",
-        "e", "uid", "dt", "dt64", "lc", "ns", "m", "arr", "dec", "day", "day32",
-        "tup", "ip4", "ip6")
-      def c(table: String, fmt: String) = ClickHouseSink.Config(
-        url = ch.endpoint, database = "default", table = table,
-        mappings = mappings, httpFormat = fmt)
-      ClickHouseSink.writeBatch(c("t_rb", "RowBinary"))(df)
-      ClickHouseSink.writeBatch(c("t_json", "JSONEachRow"))(df)
-      ClickHouseSink.writeBatch(c("t_native", "Native"))(df)
-      assert(ch.rowCount("default", "t_rb") == 200)
-      assert(ch.rowCount("default", "t_json") == 200)
-      assert(ch.rowCount("default", "t_native") == 200)
-      val rb = ch.rows("default", "t_rb").map(r => r("id") -> r).toMap
-      val js = ch.rows("default", "t_json").map(r => r("id") -> r).toMap
-      val nt = ch.rows("default", "t_native").map(r => r("id") -> r).toMap
-      assert(rb.keySet == js.keySet && rb.keySet == nt.keySet)
-      rb.foreach { case (id, rbRow) =>
-        val jsRow = js(id)
-        val ntRow = nt(id)
-        schema.map(_._1).foreach { col =>
-          (rbRow(col), jsRow(col)) match {
-            case (a: Double, b: Double) =>
-              assert(math.abs(a - b) <= math.max(1e-9, math.abs(b) * 1e-6),
-                s"row $id col $col: RowBinary=$a JSON=$b")
-            case (a, b) =>
-              assert(a == b, s"row $id col $col: RowBinary=$a JSON=$b")
-          }
-          // Native's per-value scalar layout is RowBinary's, so bit-equality
-          // with the RowBinary leg is the right bar (no float tolerance)
-          assert(ntRow(col) == rbRow(col),
-            s"row $id col $col: Native=${ntRow(col)} RowBinary=${rbRow(col)}")
-        }
+      ClickHouseSink.writeBatch(ClickHouseSink.Config(
+        url = ch.endpoint, database = "default", table = "t_native",
+        mappings = mappings))(rows.toDF(columns: _*))
+      assert(ch.receivedQueries.asScala.forall(_._1.endsWith("FORMAT Native")))
+      val stored = ch.rows("default", "t_native").map(r => r("id") -> r).toMap
+      assert(stored.size == 200)
+      // the store form of each generated value: integers as BigInt,
+      // floats as Double, DateTime/DateTime64 as epoch micros, Date/Date32
+      // as epoch days, named tuples as maps
+      rows.foreach { case (id, str, fs, b, i32, u16, f32, f64, e, uid, dt, dt64,
+                           lc, ns, m, arr, dec, day, day32, (a, n), ip4, ip6) =>
+        val want = columns.zip(Seq[Any](BigInt(id), str, fs, b, BigInt(i32),
+          BigInt(u16), f32.toDouble, f64, e, uid.toLowerCase, micros(dt),
+          micros(dt64), lc, ns, m, arr.map(BigInt(_)).toVector, dec,
+          day.toLocalDate.toEpochDay, day32.toLocalDate.toEpochDay,
+          Map("a" -> a, "n" -> BigInt(n)), ip4, ipv6Text(ip6))).toMap
+        val got = stored(BigInt(id))
+        columns.foreach(col => assert(got(col) == want(col), s"row $id col $col"))
       }
     } finally ch.stop()
   }
@@ -128,53 +135,42 @@ class RowBinaryPropertySpec extends SparkSpec {
     // The throughput fixtures run with retainRows=false, where the server
     // walks blocks with width-skips instead of materializing values. The
     // walk must accept the identical byte streams the full decode accepts
-    // (same 200-row / 22-type corpus, all three formats) and still raise
-    // the decode path's only two fallible faults: unknown enum id (691)
-    // and truncation (33).
+    // (same 200-row / 22-type corpus) and still raise the decode path's
+    // only two fallible faults: unknown enum id (691) and truncation (33).
     val ch = new MiniClickHouseServer(retainRows = false)
     ch.start()
     try {
-      ch.createTable("default", "t_rb", schema)
-      ch.createTable("default", "t_json", schema)
       ch.createTable("default", "t_native", schema)
       val rows = randomRows(new Random(20260815L), 200)
-      val df = rows.toDF("id", "s", "fs", "b", "i32", "u16", "f32", "f64",
-        "e", "uid", "dt", "dt64", "lc", "ns", "m", "arr", "dec", "day", "day32",
-        "tup", "ip4", "ip6")
-      def c(table: String, fmt: String) = ClickHouseSink.Config(
-        url = ch.endpoint, database = "default", table = table,
-        mappings = mappings, httpFormat = fmt)
-      ClickHouseSink.writeBatch(c("t_rb", "RowBinary"))(df)
-      ClickHouseSink.writeBatch(c("t_json", "JSONEachRow"))(df)
-      ClickHouseSink.writeBatch(c("t_native", "Native"))(df)
-      Seq("t_rb", "t_json", "t_native").foreach { t =>
-        assert(ch.acceptedCount("default", t) == 200, t)
-        assert(ch.rowCount("default", t) == 0, s"$t must not materialize rows")
-      }
+      ClickHouseSink.writeBatch(ClickHouseSink.Config(
+        url = ch.endpoint, database = "default", table = "t_native",
+        mappings = mappings))(rows.toDF(columns: _*))
+      assert(ch.acceptedCount("default", "t_native") == 200)
+      assert(ch.rowCount("default", "t_native") == 0, "must not materialize rows")
 
-      ch.createTable("default", "neg", Seq("e" -> "Enum8('a' = 1)"))
-      val hc = ClickHouseHttp.Config(endpoint = ch.endpoint,
-        database = "default", table = "neg", format = "RowBinary")
-      // one RowBinary row: enum id 99, not in the type's value set
-      val badEnum = intercept[ClickHouseHttp.CHServerException] {
-        ClickHouseHttp.post(hc,
-          "INSERT INTO `default`.`neg` (`e`) FORMAT RowBinary", Array[Byte](99))
-      }
-      assert(badEnum.code == 691)
-      // a Native block declaring 1 row of Int64 but carrying only 3 bytes
-      val truncated = {
+      /** One 1-column, 1-row Native block: name, declared type, raw bytes. */
+      def block(col: String, chType: String, data: Array[Byte]): Array[Byte] = {
         val out = new java.io.ByteArrayOutputStream()
-        def vi(v: Long): Unit = ClickHouseNativeTcp.wVarint(out, v)
-        def s(x: String): Unit = ClickHouseNativeTcp.wStr(out, x)
-        vi(1); vi(1) // 1 col, 1 row
-        s("e2"); s("Int64")
-        out.write(Array[Byte](1, 2, 3))
+        ClickHouseNativeTcp.wVarint(out, 1); ClickHouseNativeTcp.wVarint(out, 1)
+        ClickHouseNativeTcp.wStr(out, col); ClickHouseNativeTcp.wStr(out, chType)
+        out.write(data)
         out.toByteArray
       }
+      val hc = ClickHouseHttp.Config(endpoint = ch.endpoint,
+        database = "default", table = "neg")
+      ch.createTable("default", "neg", Seq("e" -> "Enum8('a' = 1)"))
+      // enum id 99, not in the type's value set
+      val badEnum = intercept[ClickHouseHttp.CHServerException] {
+        ClickHouseHttp.post(hc, ClickHouseHttp.insertQuery(hc, Seq("e")),
+          block("e", "Enum8('a' = 1)", Array[Byte](99)))
+      }
+      assert(badEnum.code == 691)
+      // 1 row of Int64 declared, only 3 bytes carried
       ch.createTable("default", "neg2", Seq("e2" -> "Int64"))
       val cut = intercept[ClickHouseHttp.CHServerException] {
-        ClickHouseHttp.post(hc.copy(table = "neg2", format = "Native"),
-          "INSERT INTO `default`.`neg2` (`e2`) FORMAT Native", truncated)
+        ClickHouseHttp.post(hc.copy(table = "neg2"),
+          ClickHouseHttp.insertQuery(hc.copy(table = "neg2"), Seq("e2")),
+          block("e2", "Int64", Array[Byte](1, 2, 3)))
       }
       assert(cut.code == 33)
     } finally ch.stop()

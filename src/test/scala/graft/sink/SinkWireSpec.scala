@@ -12,8 +12,8 @@ import graft.sink.SinkMapper.ColumnMapping
 /** Replays the reference's sink BDD feature
   * (glassflow-api/tests/features/sink/sink.feature, 13 scenarios) over
   * REAL sockets: the production [[ClickHouseHttp]] leg POSTs
-  * `INSERT INTO … FORMAT JSONEachRow` to [[MiniClickHouseServer]], which
-  * PARSES the insert, validates every value against the declared
+  * `INSERT INTO … FORMAT Native` to [[MiniClickHouseServer]], which
+  * DECODES the blocks, validates every column against the declared
   * ClickHouse column type (DateTime, UUID, Float32, LowCardinality,
   * Nullable, Map(LowCardinality(String),String), FixedString), and
   * answers with genuine ClickHouse error codes — so the whole
@@ -411,7 +411,6 @@ class SinkWireSpec extends SparkSpec {
       assert(query.startsWith("INSERT INTO `default`.`t`"))
       assert(params.get("async_insert").contains("1"))
       assert(params.get("wait_for_async_insert").contains("0"))
-      assert(params.get("date_time_input_format").contains("best_effort"))
     }
   }
 
@@ -435,7 +434,7 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("RowBinary: full type matrix round-trips over the wire byte-for-byte") {
+  test("Native: full type matrix round-trips over the wire byte-for-byte") {
     withServer() { ch =>
       ch.createTable("default", "rb", Seq(
         "s" -> "String", "fs" -> "FixedString(6)", "b" -> "Bool",
@@ -478,8 +477,7 @@ class SinkWireSpec extends SparkSpec {
           "cast('18446744073709551615' as decimal(20,0)) as u64",
           "cast(1.5 as float) as f32", "cast(2.25 as double) as f64",
           "e", "uid", "dt", "dt64", "lc", "ns", "m", "arr")
-      val c = cfg(ch, "rb", m).copy(httpFormat = "RowBinary")
-      ClickHouseSink.writeBatch(c)(df)
+      ClickHouseSink.writeBatch(cfg(ch, "rb", m))(df)
       assert(ch.rowCount("default", "rb") == 1)
       val r = ch.rows("default", "rb").head
       assert(r("s") == "héllo")
@@ -501,53 +499,8 @@ class SinkWireSpec extends SparkSpec {
       assert(r("ns") == null)
       assert(r("m") == Map("k1" -> "v1", "k2" -> "v2"))
       assert(r("arr") == Vector(BigInt(1), BigInt(2), BigInt(3)))
-      // the INSERT really went over the wire as RowBinary
-      assert(ch.receivedQueries.asScala.exists(_._1.endsWith("FORMAT RowBinary")))
-    }
-  }
-
-  test("RowBinary: poison-row isolation works on the binary leg too") {
-    withServer() { ch =>
-      // the TABLE only knows enum id 1; the client mapping also knows
-      // 'blue' = 2 — a 'blue' row encodes fine client-side and is rejected
-      // by the SERVER mid-slab with 691, so isolation must replay the slab
-      // row-by-row (each single-row POST decodes independently: RowBinary
-      // framing is per-POST) and dead-letter exactly the poison row
-      ch.createTable("default", "rb2",
-        Seq("id" -> "Int32", "color" -> "Enum8('red' = 1)"))
-      val m = Seq(ColumnMapping("id", "id", "Int32"),
-        ColumnMapping("color", "color", "Enum8('red' = 1, 'blue' = 2)"))
-      val df = Seq((1, "red"), (2, "blue"), (3, "red")).toDF("id", "color")
-      val dlq = dlqQueue()
-      ClickHouseSink.foreachBatchHandler(
-        cfg(ch, "rb2", m).copy(httpFormat = "RowBinary"),
-        d => d.collect().foreach(dlq.add))(df.coalesce(1), 0L)
-      assert(ch.rowCount("default", "rb2") == 2)
-      assert(ch.rows("default", "rb2").map(_("id")).toSet == Set(BigInt(1), BigInt(3)))
-      assert(dlq.size == 1)
-      assert(dlq.asScala.head.getAs[String]("error").contains("Code: 691"))
-      // binary rows still dead-letter with a READABLE JSON original_message
-      val orig = dlq.asScala.head.getAs[String]("original_message")
-      assert(orig.contains("blue"), s"expected row content in: $orig")
-    }
-  }
-
-  test("RowBinary: a row the ENCODER rejects is isolated, not the whole batch") {
-    withServer() { ch =>
-      ch.createTable("default", "rb3",
-        Seq("id" -> "Int32", "code" -> "FixedString(3)"))
-      val hc = ClickHouseHttp.Config(ch.endpoint, "default", "rb3",
-        format = "RowBinary",
-        columnTypes = Map("id" -> "Int32", "code" -> "FixedString(3)"))
-      // no mapper in front: the 7-byte value reaches the encoder raw, which
-      // must reject THAT row client-side and let the others land
-      val df = Seq((1, "ok"), (2, "toolong"), (3, "ko")).toDF("id", "code")
-        .coalesce(1)
-      val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
-      assert(ch.rowCount("default", "rb3") == 2)
-      assert(failed.size == 1)
-      assert(failed.head._2.contains("Code: 131"))
-      assert(failed.head._1.contains("toolong"), "JSON repr carries the content")
+      // the INSERT really went over the wire as Native
+      assert(ch.receivedQueries.asScala.exists(_._1.endsWith("FORMAT Native")))
     }
   }
 
@@ -604,7 +557,7 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("dotted DESTINATION column names stay verbatim on the wire (both formats)") {
+  test("dotted DESTINATION column names stay verbatim on the wire") {
     withServer() { ch =>
       // OTel-style flat keys with dots are legal ClickHouse column names
       ch.createTable("default", "dotted",
@@ -614,11 +567,8 @@ class SinkWireSpec extends SparkSpec {
         ColumnMapping("pod", "k8s.pod.name", "String"))
       val df = Seq(("us-east-1", "api-1"), ("eu-west-1", "api-2"))
         .toDF("region", "pod")
-      for (fmt <- Seq("JSONEachRow", "RowBinary")) {
-        ClickHouseSink.writeBatch(cfg(ch, "dotted", m)
-          .copy(httpFormat = fmt))(df)
-      }
-      assert(ch.rowCount("default", "dotted") == 4)
+      ClickHouseSink.writeBatch(cfg(ch, "dotted", m))(df)
+      assert(ch.rowCount("default", "dotted") == 2)
       assert(ch.rows("default", "dotted").map(_("attributes.region")).toSet ==
         Set("us-east-1", "eu-west-1"))
       assert(ch.receivedQueries.asScala.forall(_._1.contains("`attributes.region`")))
@@ -627,7 +577,7 @@ class SinkWireSpec extends SparkSpec {
         ClickHouseSink.httpConfig(cfg(ch, "dotted", m)))(
         graft.sink.SinkMapper(m)(df)).collect().toSeq
       assert(failed.isEmpty)
-      assert(ch.rowCount("default", "dotted") == 6)
+      assert(ch.rowCount("default", "dotted") == 4)
     }
   }
 
@@ -644,12 +594,11 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("Decimal(p,s) and Date/Date32 round-trip identically over both wire formats") {
+  test("Decimal(p,s) and Date/Date32 round-trip over the Native wire") {
     withServer() { ch =>
       val schema = Seq("id" -> "Int32", "price" -> "Decimal(10, 2)",
         "d" -> "Date", "d32" -> "Date32")
-      ch.createTable("default", "dec_json", schema)
-      ch.createTable("default", "dec_rb", schema)
+      ch.createTable("default", "dec", schema)
       val m = schema.map { case (n, t) => ColumnMapping(n, n, t) }
       val df = Seq(
         (1, BigDecimal("19.99"), java.sql.Date.valueOf("2025-06-01"),
@@ -659,41 +608,34 @@ class SinkWireSpec extends SparkSpec {
         (3, BigDecimal("0.5"), java.sql.Date.valueOf("2149-06-06"),
           java.sql.Date.valueOf("1900-01-01"))
       ).toDF("id", "price", "d", "d32")
-      ClickHouseSink.writeBatch(cfg(ch, "dec_json", m))(df)
-      ClickHouseSink.writeBatch(cfg(ch, "dec_rb", m)
-        .copy(httpFormat = "RowBinary"))(df)
-      def byId(t: String) =
-        ch.rows("default", t).map(r => r("id") -> r).toMap
-      val (j, r) = (byId("dec_json"), byId("dec_rb"))
-      assert(j.size == 3 && r.size == 3)
-      // the two wire encodings share no code; canonical equality across
-      // them is the same cross-format oracle RowBinaryPropertySpec uses
-      for (id <- j.keys) assert(j(id) == r(id), s"row $id differs: ${j(id)} vs ${r(id)}")
-      assert(j(BigInt(1))("price") == BigDecimal("19.99"))
-      assert(j(BigInt(2))("d32") ==
-        java.time.LocalDate.of(2299, 12, 31).toEpochDay)
-      assert(j(BigInt(3))("d") ==
-        java.time.LocalDate.of(2149, 6, 6).toEpochDay)
+      ClickHouseSink.writeBatch(cfg(ch, "dec", m))(df)
+      val j = ch.rows("default", "dec").map(r => r("id") -> r).toMap
+      assert(j.size == 3)
+      def day(iso: String) = java.time.LocalDate.parse(iso).toEpochDay
+      assert(j(BigInt(1)) == Map("id" -> BigInt(1), "price" -> BigDecimal("19.99"),
+        "d" -> day("2025-06-01"), "d32" -> day("1955-11-05")))
+      assert(j(BigInt(2)) == Map("id" -> BigInt(2), "price" -> BigDecimal("-12345678.01"),
+        "d" -> 0L, "d32" -> day("2299-12-31")))
+      assert(j(BigInt(3)) == Map("id" -> BigInt(3), "price" -> BigDecimal("0.5"),
+        "d" -> day("2149-06-06"), "d32" -> day("1900-01-01")))
     }
   }
 
   test("Decimal overflow and out-of-range Date are row-data faults: isolated per row, not per batch") {
     withServer() { ch =>
-      // JSONEachRow leg: the SERVER rejects (407 / 321), row-wise replay
-      // dead-letters just the poison rows
+      // the ENCODER rejects client-side in the server's Code: NNN shape,
+      // so poison isolation works without a server round-trip
       ch.createTable("default", "dec_of", Seq("id" -> "Int32", "v" -> "Decimal(6, 2)"))
-      val hc = ClickHouseHttp.Config(ch.endpoint, "default", "dec_of")
-      val df = Seq((1, "12.34"), (2, "123456789.99"), (3, "-0.01"))
-        .toDF("id", "v").coalesce(1)
+      val hc = ClickHouseHttp.Config(ch.endpoint, "default", "dec_of",
+        columnTypes = Map("id" -> "Int32", "v" -> "Decimal(6, 2)"))
+      val df = Seq((1, BigDecimal("12.34")), (2, BigDecimal("123456789.99")),
+        (3, BigDecimal("-0.01"))).toDF("id", "v").coalesce(1)
       val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
       assert(ch.rowCount("default", "dec_of") == 2)
       assert(failed.size == 1 && failed.head._2.contains("Code: 407"))
 
-      // RowBinary leg: the ENCODER rejects client-side in the same Code: NNN
-      // shape, so poison isolation works without a server round-trip
       ch.createTable("default", "date_of", Seq("id" -> "Int32", "d" -> "Date"))
       val hcRb = ClickHouseHttp.Config(ch.endpoint, "default", "date_of",
-        format = "RowBinary",
         columnTypes = Map("id" -> "Int32", "d" -> "Date"))
       val df2 = Seq((1, java.sql.Date.valueOf("2025-01-01")),
         (2, java.sql.Date.valueOf("1955-11-05")), // pre-1970: u16 Date can't hold it
@@ -705,7 +647,7 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("enum type with escaped quote / '=' in a label survives DESCRIBE, validation and both wire formats") {
+  test("enum type with escaped quote / '=' in a label survives DESCRIBE, validation and the Native wire") {
     withServer() { ch =>
       val enumType = """Enum8('won\'t' = 1, 'a=b' = 2)"""
       ch.createTable("default", "sev", Seq("id" -> "Int32", "e" -> enumType))
@@ -719,30 +661,9 @@ class SinkWireSpec extends SparkSpec {
       assert(ClickHouseSink.validateAgainstTable(cfg(ch, "sev", m)).isRight,
         "escaped-quote enum column must validate against the live schema")
       val df = Seq((1, "won't"), (2, "a=b")).toDF("id", "e")
-      for (fmt <- Seq("JSONEachRow", "RowBinary"))
-        ClickHouseSink.writeBatch(cfg(ch, "sev", m).copy(httpFormat = fmt))(df)
-      assert(ch.rowCount("default", "sev") == 4)
+      ClickHouseSink.writeBatch(cfg(ch, "sev", m))(df)
+      assert(ch.rowCount("default", "sev") == 2)
       assert(ch.rows("default", "sev").map(_("e")).toSet == Set("won't", "a=b"))
-    }
-  }
-
-  test("Map(String, Int64) column: stringified map values re-encode as typed Int64 on the RowBinary wire") {
-    withServer() { ch =>
-      val schema = Seq("id" -> "Int32", "counts" -> "Map(String, Int64)")
-      ch.createTable("default", "m_json", schema)
-      ch.createTable("default", "m_rb", schema)
-      val m = schema.map { case (n, t) => ColumnMapping(n, n, t) }
-      // the mapper coerces map VALUES to strings (reference types.go:238-276);
-      // the RowBinary encoder must re-parse them to the declared wire type —
-      // encoding the string raw would corrupt the row framing
-      val df = Seq((1, Map("a" -> 42L, "b" -> -7L)), (2, Map("z" -> 0L)))
-        .toDF("id", "counts")
-      ClickHouseSink.writeBatch(cfg(ch, "m_json", m))(df)
-      ClickHouseSink.writeBatch(cfg(ch, "m_rb", m).copy(httpFormat = "RowBinary"))(df)
-      val j = ch.rows("default", "m_json").map(r => r("id") -> r("counts")).toMap
-      val r = ch.rows("default", "m_rb").map(r => r("id") -> r("counts")).toMap
-      assert(j == r, s"formats disagree: $j vs $r")
-      assert(j(BigInt(1)) == Map("a" -> BigInt(42), "b" -> BigInt(-7)))
     }
   }
 
@@ -772,11 +693,10 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("pre-epoch fractional timestamps agree across wire formats (floor, not truncate-toward-zero)") {
+  test("pre-epoch fractional timestamps floor on the Native wire (not truncate-toward-zero)") {
     withServer() { ch =>
       val schema = Seq("id" -> "Int32", "ts" -> "DateTime64(3)")
-      ch.createTable("default", "pre_json", schema)
-      ch.createTable("default", "pre_rb", schema)
+      ch.createTable("default", "pre", schema)
       val m = schema.map { case (n, t) => ColumnMapping(n, n, t) }
       def ts(sec: Long, nanos: Int) =
         java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec, nanos.toLong))
@@ -785,12 +705,8 @@ class SinkWireSpec extends SparkSpec {
         (2, ts(-2, 999500000)),  // -1.0005 s: sub-ms digits must FLOOR → -1001 ms
         (3, ts(1, 250000000))    // post-epoch control
       ).toDF("id", "ts")
-      ClickHouseSink.writeBatch(cfg(ch, "pre_json", m))(df)
-      ClickHouseSink.writeBatch(cfg(ch, "pre_rb", m)
-        .copy(httpFormat = "RowBinary"))(df)
-      val j = ch.rows("default", "pre_json").map(r => r("id") -> r("ts")).toMap
-      val r = ch.rows("default", "pre_rb").map(r => r("id") -> r("ts")).toMap
-      assert(j == r, s"formats disagree: $j vs $r")
+      ClickHouseSink.writeBatch(cfg(ch, "pre", m))(df)
+      val j = ch.rows("default", "pre").map(r => r("id") -> r("ts")).toMap
       assert(j(BigInt(1)) == -500000L, "−0.5 s must encode as −0.5 s, not +0.5 s")
       assert(j(BigInt(2)) == -1001000L, "sub-precision pre-epoch digits floor")
       assert(j(BigInt(3)) == 1250000L)
@@ -801,7 +717,6 @@ class SinkWireSpec extends SparkSpec {
     withServer() { ch =>
       ch.createTable("default", "dtr", Seq("id" -> "Int32", "t" -> "DateTime"))
       val hc = ClickHouseHttp.Config(ch.endpoint, "default", "dtr",
-        format = "RowBinary",
         columnTypes = Map("id" -> "Int32", "t" -> "DateTime"))
       val df = Seq(
         (1, java.sql.Timestamp.valueOf("2025-06-01 10:00:00")),
@@ -820,7 +735,6 @@ class SinkWireSpec extends SparkSpec {
       ch.createTable("default", "nat1",
         Seq("id" -> "Int32", "code" -> "FixedString(3)", "tags" -> "Array(Int64)"))
       val hc = ClickHouseHttp.Config(ch.endpoint, "default", "nat1",
-        format = "Native",
         columnTypes = Map("id" -> "Int32", "code" -> "FixedString(3)",
           "tags" -> "Array(Int64)"))
       // row 2 overflows FixedString AFTER its array column already buffered
@@ -831,6 +745,7 @@ class SinkWireSpec extends SparkSpec {
       val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
       assert(ch.rowCount("default", "nat1") == 2)
       assert(failed.size == 1 && failed.head._2.contains("Code: 131"))
+      assert(failed.head._1.contains("toolong"), "JSON repr carries the content")
       val stored = ch.rows("default", "nat1").map(r => r("id") -> r("tags")).toMap
       assert(stored(BigInt(1)) == Vector(BigInt(10), BigInt(20)))
       assert(stored(BigInt(3)) == Vector())
@@ -841,7 +756,7 @@ class SinkWireSpec extends SparkSpec {
     withServer() { ch =>
       ch.createTable("default", "nat2", Seq("id" -> "Int32"))
       val hc = ClickHouseHttp.Config(ch.endpoint, "default", "nat2",
-        format = "Native", columnTypes = Map("id" -> "Int32"))
+        columnTypes = Map("id" -> "Int32"))
       val df = Seq(1, 2, 3).toDF("id").coalesce(1)
       // fault 1 rejects the 3-row block (row-data class → replay);
       // fault 2 rejects the first replayed single-row block → DLQ for it
@@ -850,6 +765,7 @@ class SinkWireSpec extends SparkSpec {
       val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
       assert(ch.rowCount("default", "nat2") == 2)
       assert(failed.size == 1 && failed.head._2.contains("Code: 321"))
+      assert(failed.head._1 == """{"id":1}""", "the replayed poison row's JSON")
     }
   }
 
@@ -865,7 +781,7 @@ class SinkWireSpec extends SparkSpec {
         .toDF("id", "level", "attrs")
       val dlq = dlqQueue()
       ClickHouseSink.foreachBatchHandler(
-        cfg(ch, "nat3", m).copy(httpFormat = "Native"),
+        cfg(ch, "nat3", m),
         d => d.collect().foreach(dlq.add))(df, 0L)
       assert(dlq.isEmpty)
       assert(ch.rowCount("default", "nat3") == 2)
@@ -906,6 +822,21 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
+  test("Native isolation JSON-encodes only the failed rows: no to_json below the insert") {
+    import org.apache.spark.sql.catalyst.expressions.StructsToJson
+    import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+    val df = Seq((1, "a"), (2, "b")).toDF("id", "s")
+    val plan = ClickHouseHttp.writeIsolating(ClickHouseHttp.Config(
+      "http://127.0.0.1:1", "default", "t"))(df).queryExecution.analyzed
+    val inserts = plan.collect { case m: MapPartitions => m }
+    assert(inserts.size == 1)
+    def toJsonIn(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.expressions.exists(_.exists(_.isInstanceOf[StructsToJson]))
+    assert(plan.exists(toJsonIn), "the failures carry their JSON repr")
+    assert(!inserts.head.child.exists(toJsonIn),
+      "rows headed for the INSERT must not pay a to_json each")
+  }
+
   test("poison-minority batch still isolates per row through the executor-side DLQ path") {
     withServer() { ch =>
       ch.createTable("default", "pmin",
@@ -924,7 +855,28 @@ class SinkWireSpec extends SparkSpec {
     }
   }
 
-  test("Tuple / Nested / IPv4 / IPv6 columns round-trip over all three wire formats") {
+  test("a Native poison row dead-letters as its JSON, DateTime64 microseconds included") {
+    withServer() { ch =>
+      ch.createTable("default", "pj", Seq("id" -> "Int32",
+        "ts" -> "DateTime64(6)", "code" -> "FixedString(3)"))
+      val m = Seq(ColumnMapping("id", "id", "Int32"),
+        ColumnMapping("ts", "ts", "DateTime64(6)"),
+        ColumnMapping("code", "code", "String"))
+      def ts(iso: String) = java.sql.Timestamp.from(java.time.Instant.parse(iso))
+      val df = Seq((1, ts("2025-02-21T07:45:48.123456Z"), "ok"),
+        (2, ts("2025-02-21T07:45:49.654321Z"), "toolong"))
+        .toDF("id", "ts", "code").coalesce(1)
+      val dlq = dlqQueue()
+      ClickHouseSink.foreachBatchHandler(cfg(ch, "pj", m),
+        d => d.collect().foreach(dlq.add))(df, 0L)
+      assert(ch.rowCount("default", "pj") == 1)
+      assert(dlq.size == 1)
+      assert(dlq.asScala.head.getAs[String]("original_message") ==
+        """{"id":2,"ts":"2025-02-21T07:45:49.654321Z","code":"toolong"}""")
+    }
+  }
+
+  test("Tuple / Nested / IPv4 / IPv6 columns round-trip over the Native wire") {
     withServer() { ch =>
       val schema = Seq("id" -> "Int32", "tup" -> "Tuple(a String, n Int32)",
         "tags" -> "Nested(k String, v Int32)", "ip4" -> "IPv4", "ip6" -> "IPv6")
@@ -937,39 +889,32 @@ class SinkWireSpec extends SparkSpec {
           "1.2.3.4", "2001:0db8:0000:0000:0000:0000:0000:0001"),
         (2, ("y", -5), Seq.empty[(String, Int)], "255.0.0.1", "::1"))
         .toDF("id", "tup", "tags", "ip4", "ip6")
-      Seq("JSONEachRow", "RowBinary", "Native").foreach { fmt =>
-        val table = s"tn_${fmt.toLowerCase}"
-        ch.createTable("default", table, schema)
-        val c = cfg(ch, table, m).copy(httpFormat = fmt)
-        assert(ClickHouseSink.validateAgainstTable(c).isRight)
-        ClickHouseSink.writeBatch(c)(df)
-        assert(ch.rowCount("default", table) == 2, s"format $fmt")
-        val rows = ch.rows("default", table).map(r => r("id") -> r).toMap
-        val r1 = rows(BigInt(1)); val r2 = rows(BigInt(2))
-        assert(r1("tup") == Map("a" -> "x", "n" -> BigInt(7)), s"format $fmt")
-        assert(r1("tags") == Vector(Map("k" -> "k1", "v" -> BigInt(10)),
-          Map("k" -> "k2", "v" -> BigInt(20))), s"format $fmt")
-        // canonical text: dotted quad / RFC 5952 regardless of input spelling
-        assert(r1("ip4") == "1.2.3.4" && r1("ip6") == "2001:db8::1", s"format $fmt")
-        assert(r2("tup") == Map("a" -> "y", "n" -> BigInt(-5)), s"format $fmt")
-        assert(r2("tags") == Vector.empty, s"format $fmt")
-        assert(r2("ip4") == "255.0.0.1" && r2("ip6") == "::1", s"format $fmt")
-      }
+      ch.createTable("default", "tn", schema)
+      val c = cfg(ch, "tn", m)
+      assert(ClickHouseSink.validateAgainstTable(c).isRight)
+      ClickHouseSink.writeBatch(c)(df)
+      assert(ch.rowCount("default", "tn") == 2)
+      val rows = ch.rows("default", "tn").map(r => r("id") -> r).toMap
+      val r1 = rows(BigInt(1)); val r2 = rows(BigInt(2))
+      assert(r1("tup") == Map("a" -> "x", "n" -> BigInt(7)))
+      assert(r1("tags") == Vector(Map("k" -> "k1", "v" -> BigInt(10)),
+        Map("k" -> "k2", "v" -> BigInt(20))))
+      // canonical text: dotted quad / RFC 5952 regardless of input spelling
+      assert(r1("ip4") == "1.2.3.4" && r1("ip6") == "2001:db8::1")
+      assert(r2("tup") == Map("a" -> "y", "n" -> BigInt(-5)))
+      assert(r2("tags") == Vector.empty)
+      assert(r2("ip4") == "255.0.0.1" && r2("ip6") == "::1")
     }
   }
 
-  test("unnamed Tuple on the JSONEachRow leg fails start-time validation, binary legs pass") {
+  test("unnamed Tuple passes start-time validation and round-trips positionally") {
     withServer() { ch =>
       ch.createTable("default", "ut", Seq("p" -> "Tuple(String, Int32)"))
       val m = Seq(ColumnMapping("p", "p", "Tuple(String, Int32)"))
-      // JSON leg: Spark writes a struct as an OBJECT keyed _1/_2 — no
-      // server setting maps that back to positions, so config-time reject
-      val json = cfg(ch, "ut", m) // default format = JSONEachRow
-      val err = ClickHouseSink.validateAgainstTable(json)
-      assert(err.isLeft && err.swap.exists(_.contains("unnamed Tuple")))
-      // the positional binary formats handle it fine
-      val c = cfg(ch, "ut", m).copy(httpFormat = "Native")
-      assert(ClickHouseSink.validateAgainstTable(c).isRight)
+      // Native tuple columns are positional, so an unnamed Tuple needs no
+      // element names on the wire
+      val c = cfg(ch, "ut", m)
+      assert(ClickHouseSink.validateAgainstTable(c) == Right(()))
       ClickHouseSink.writeBatch(c)(Seq(Tuple1(("z", 3))).toDF("p"))
       assert(ch.rowCount("default", "ut") == 1)
       assert(ch.rows("default", "ut").head("p") == Vector("z", BigInt(3)))
@@ -978,24 +923,30 @@ class SinkWireSpec extends SparkSpec {
 
   test("malformed IP literal dead-letters alone with the server's 441 on both binary legs") {
     withServer() { ch =>
-      Seq("RowBinary", "Native").foreach { fmt =>
-        val table = s"ip_${fmt.toLowerCase}"
+      val tcp = new MiniClickHouseTcpServer(ch)
+      tcp.start()
+      val types = Map("id" -> "Int32", "addr" -> "IPv6")
+      // the two binary legs: Native blocks over HTTP and over native TCP
+      val legs = Seq[(String, DataFrame => org.apache.spark.sql.Dataset[(String, String)])](
+        "http" -> ClickHouseHttp.writeIsolating(ClickHouseHttp.Config(
+          ch.endpoint, "default", "ip_http", columnTypes = types)),
+        "tcp" -> ClickHouseNativeTcp.writeIsolating(ClickHouseNativeTcp.parseEndpoint(
+          tcp.endpoint, cfg(ch, "ip_tcp", Nil)).copy(columnTypes = types)))
+      try legs.foreach { case (fmt, isolating) =>
+        val table = s"ip_$fmt"
         ch.createTable("default", table, Seq("id" -> "Int32", "addr" -> "IPv6"))
-        val hc = ClickHouseHttp.Config(ch.endpoint, "default", table,
-          format = fmt,
-          columnTypes = Map("id" -> "Int32", "addr" -> "IPv6"))
         // no mapper in front: the bad literal reaches the ENCODER raw —
         // client-side parse rejects that row alone, the rest land
         val df = Seq((1, "::1"), (2, "not-an-ip"), (3, "1.2.3.4"))
           .toDF("id", "addr").coalesce(1)
-        val failed = ClickHouseHttp.writeIsolating(hc)(df).collect().toSeq
+        val failed = isolating(df).collect().toSeq
         assert(ch.rowCount("default", table) == 2, s"format $fmt")
         // a plain v4 literal maps into ::ffff: form, as the server parses it
         assert(ch.rows("default", table).map(_("addr")).toSet ==
           Set("::1", "::ffff:1.2.3.4"), s"format $fmt")
         assert(failed.size == 1 && failed.head._2.contains("Code: 441"), s"format $fmt")
         assert(failed.head._1.contains("not-an-ip"), s"format $fmt")
-      }
+      } finally tcp.stop()
     }
   }
 
@@ -1117,6 +1068,14 @@ class SinkWireSpec extends SparkSpec {
     (proxy, killed)
   }
 
+  /** A Native block of (id Int64, s String) rows. */
+  private def nativeBlock(rows: Seq[Row]): Array[Byte] = {
+    val b = new graft.types.NativeEncoder.BlockBuilder(Seq("id", "s"),
+      Seq(graft.types.CHType.CHInt(64), graft.types.CHType.CHString))
+    rows.foreach(r => assert(b.tryAppend(r).isEmpty))
+    b.build()
+  }
+
   test("a response-phase fault after the body was sent RETHROWS by default — no blind resend that could duplicate committed rows") {
     withServer() { ch =>
       ch.createTable("default", "ev_rp", Seq("id" -> "Int64", "s" -> "String"))
@@ -1126,8 +1085,7 @@ class SinkWireSpec extends SparkSpec {
         val c = ClickHouseHttp.Config(
           endpoint = s"http://127.0.0.1:${proxy.getLocalPort}",
           database = "default", table = "ev_rp")
-        val body = (1 to 3).map(i => s"""{"id":$i,"s":"v$i"}""").mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val body = nativeBlock((1 to 3).map(i => Row(i.toLong, s"v$i")))
         val q = ClickHouseHttp.insertQuery(c, Seq("id", "s"))
         val thrown = intercept[Exception] { ClickHouseHttp.post(c, q, body) }
         assert(ClickHouseHttp.isConnectionLevel(thrown),
@@ -1151,8 +1109,7 @@ class SinkWireSpec extends SparkSpec {
           endpoint = s"http://127.0.0.1:${proxy.getLocalPort}",
           database = "default", table = "ev_rd",
           settings = Map("insert_deduplicate" -> "1"))
-        val body = (1 to 3).map(i => s"""{"id":$i,"s":"v$i"}""").mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val body = nativeBlock((1 to 3).map(i => Row(i.toLong, s"v$i")))
         val q = ClickHouseHttp.insertQuery(c, Seq("id", "s"))
         ClickHouseHttp.post(c, q, body) // must complete via the in-place retry
         assert(killed.get == 1, "the proxy never killed a response — vacuous")
@@ -1172,8 +1129,7 @@ class SinkWireSpec extends SparkSpec {
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "ev_lcarr",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
-          ColumnMapping("tags", "tags", "Array(LowCardinality(String))")),
-        httpFormat = "Native"))(df)
+          ColumnMapping("tags", "tags", "Array(LowCardinality(String))"))))(df)
       assert(ch.rowCount("default", "ev_lcarr") == 300)
       val row7 = ch.rows("default", "ev_lcarr").find(_("id") == 7L).get
       assert(row7("tags") == Vector("tag1", "tag2", "tag3"))

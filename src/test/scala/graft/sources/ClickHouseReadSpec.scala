@@ -68,8 +68,7 @@ class ClickHouseReadSpec extends SparkSpec {
         .withColumn("u64", $"u64".cast(DecimalType(20, 0)))
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "rt",
-        mappings = schema.map { case (n, t) => ColumnMapping(n, n, t) },
-        httpFormat = "Native"))(df)
+        mappings = schema.map { case (n, t) => ColumnMapping(n, n, t) }))(df)
 
       val back = reader(ch, "rt").load().orderBy("id")
       // inferred schema follows CHType.sparkType
@@ -123,8 +122,7 @@ class ClickHouseReadSpec extends SparkSpec {
       mappings = Seq(ColumnMapping("id", "id", "Int64"),
         ColumnMapping("kind", "kind", "String"),
         ColumnMapping("score", "score", "Float64"),
-        ColumnMapping("note", "note", "Nullable(String)")),
-      httpFormat = "Native"))(df)
+        ColumnMapping("note", "note", "Nullable(String)"))))(df)
     ch.receivedQueries.clear()
   }
 
@@ -208,8 +206,7 @@ class ClickHouseReadSpec extends SparkSpec {
         url = ch.endpoint, database = "default", table = "tm_part",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
           ColumnMapping("ts", "ts", "DateTime64(6)"),
-          ColumnMapping("day", "day", "Date")),
-        httpFormat = "Native"))(df)
+          ColumnMapping("day", "day", "Date"))))(df)
       ch.receivedQueries.clear()
       // a DateTime64 partition column strides in epoch micros and renders
       // tz-unambiguous bound literals — the natural parallel scan over an
@@ -416,8 +413,7 @@ class ClickHouseReadSpec extends SparkSpec {
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "lc_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
-          ColumnMapping("tag", "tag", "LowCardinality(String)")),
-        httpFormat = "Native"))(
+          ColumnMapping("tag", "tag", "LowCardinality(String)"))))(
         Seq((1L, "beta"), (2L, "alpha"), (3L, "gamma")).toDF("id", "tag"))
       // Nullable(LowCardinality(...)) is an illegal type both sides ban —
       // the derived aggregate result type must strip the LC wrapper
@@ -485,8 +481,7 @@ class ClickHouseReadSpec extends SparkSpec {
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "f_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
-          ColumnMapping("f32", "f32", "Float32")),
-        httpFormat = "Native"))(
+          ColumnMapping("f32", "f32", "Float32"))))(
         Seq((1L, 0.1f), (2L, 0.2f), (3L, 0.3f)).toDF("id", "f32"))
       ch.receivedQueries.clear()
       // 0.1f is the canonical promotion trap: (double)0.1f != 0.1d, so a
@@ -521,8 +516,7 @@ class ClickHouseReadSpec extends SparkSpec {
         url = ch.endpoint, database = "default", table = "nan_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
           ColumnMapping("f", "f", "Float64"),
-          ColumnMapping("nf", "nf", "Nullable(Float64)")),
-        httpFormat = "Native"))(
+          ColumnMapping("nf", "nf", "Nullable(Float64)"))))(
         Seq((1L, 1.5, Some(1.5)), (2L, Double.NaN, None: Option[Double]),
           (3L, 100.0, Some(100.0))).toDF("id", "f", "nf"))
       ch.receivedQueries.clear()
@@ -575,8 +569,7 @@ class ClickHouseReadSpec extends SparkSpec {
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
           ColumnMapping("dt64", "dt64", "DateTime64(6)"),
           ColumnMapping("dt", "dt", "DateTime"),
-          ColumnMapping("day", "day", "Date")),
-        httpFormat = "Native"))(df)
+          ColumnMapping("day", "day", "Date"))))(df)
       ch.receivedQueries.clear()
       // a timestamp RANGE bound compiles to epoch micros — tz-unambiguous
       val boundary = ts("2024-03-10T07:00:00Z")
@@ -670,8 +663,7 @@ class ClickHouseReadSpec extends SparkSpec {
         url = ch.endpoint, database = "default", table = "env_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
           ColumnMapping("dt64", "dt64", "DateTime64(6)"),
-          ColumnMapping("day", "day", "Date")),
-        httpFormat = "Native"))(df)
+          ColumnMapping("day", "day", "Date"))))(df)
       // 150 members: two hit rows 5 and 7, the rest are off-grid minutes
       // inside [05:00, 07:00] — min/max span hours 5..7 of day one
       val hits = Seq(5, 7).map(h =>
@@ -763,8 +755,7 @@ class ClickHouseReadSpec extends SparkSpec {
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "dst_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
-          ColumnMapping("dt64", "dt64", "DateTime64(6)")),
-        httpFormat = "Native"))(df)
+          ColumnMapping("dt64", "dt64", "DateTime64(6)"))))(df)
       val tzBefore = spark.conf.get("spark.sql.session.timeZone")
       spark.conf.set("spark.sql.session.timeZone", "America/New_York")
       try {
@@ -805,8 +796,7 @@ class ClickHouseReadSpec extends SparkSpec {
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "nl_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
-          ColumnMapping("s", "s", "String")),
-        httpFormat = "Native"))(
+          ColumnMapping("s", "s", "String"))))(
         Seq((1L, "line1\nline2"), (2L, "plain")).toDF("id", "s"))
       ch.receivedQueries.clear()
       // the query travels as the whole POST body; a server that read only
@@ -825,8 +815,7 @@ class ClickHouseReadSpec extends SparkSpec {
       ClickHouseSink.writeBatch(ClickHouseSink.Config(
         url = ch.endpoint, database = "default", table = "tup_t",
         mappings = Seq(ColumnMapping("id", "id", "Int64"),
-          ColumnMapping("tup", "tup", "Tuple(a String, n Int32)")),
-        httpFormat = "Native"))(
+          ColumnMapping("tup", "tup", "Tuple(a String, n Int32)"))))(
         Seq((1L, ("x", 10)), (2L, ("y", 20))).toDF("id", "tup"))
       ch.receivedQueries.clear()
       // selecting ONE struct field invites Spark's nested pruning to pass
